@@ -1,7 +1,7 @@
 # Developer workflow (the reference's Makefile exposes run/test;
 # ours exposes the three verification surfaces).
 
-.PHONY: test selfcheck bench run all
+.PHONY: test selfcheck bench perf run all
 
 # reference `make run` analog: boot the engine server process
 # (env config: HTTP_ADDR/GRPC_ADDR/DATA_DIR/INGEST_*/RETENTION_DAYS)
@@ -19,5 +19,12 @@ selfcheck-sf01:
 
 bench:
 	python bench.py
+
+# service benchmark of record (perfbench/README.md): both gated
+# workloads, untraced, at one seed
+SEED ?= 1
+perf:
+	python3 perfbench/run.py --workload backfill --seed $(SEED) --seconds 20 --trace 0
+	python3 perfbench/run.py --workload mixed --seed $(SEED) --seconds 20 --trace 0
 
 all: test selfcheck bench

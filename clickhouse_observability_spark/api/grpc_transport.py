@@ -262,6 +262,8 @@ def serve_grpc_web(handler: LogServiceHandler, host: str = "127.0.0.1", port: in
 
     class Handler(BaseHTTPRequestHandler):
         protocol_version = "HTTP/1.1"
+        # TCP_NODELAY: a reply must not wait for the client's delayed ACK
+        disable_nagle_algorithm = True
 
         def log_message(self, *a):  # silence
             pass

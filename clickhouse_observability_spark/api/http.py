@@ -676,6 +676,10 @@ class LogsApi:
         api = self
 
         class Handler(BaseHTTPRequestHandler):
+            # TCP_NODELAY: a reply must not wait for the client's
+            # delayed ACK
+            disable_nagle_algorithm = True
+
             def log_message(self, *a):  # silence
                 pass
 

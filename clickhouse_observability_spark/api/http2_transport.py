@@ -22,7 +22,8 @@ their RFCs with stdlib only:
 
 `serve_grpc_http2` is a real h2c socket server for LogService (unary
 BatchWrite); `grpc_http2_call` is the in-repo client that e2e-tests
-it over a genuine HTTP/2 exchange.
+it over a genuine HTTP/2 exchange, honouring the peer's flow-control
+windows and max frame size on the send side.
 """
 
 from __future__ import annotations
@@ -464,10 +465,13 @@ class _Conn:
                     body = _strip_padding(flags, payload, False)
                     st["data"] += body
                     if body:
-                        # open the flow-control window back up (conn + stream)
+                        # open the flow-control window back up (conn +
+                        # stream) in one write
                         inc = struct.pack(">I", len(body))
-                        self._send(pack_frame(FT_WINDOW_UPDATE, 0, 0, inc))
-                        self._send(pack_frame(FT_WINDOW_UPDATE, 0, sid, inc))
+                        self._send(
+                            pack_frame(FT_WINDOW_UPDATE, 0, 0, inc)
+                            + pack_frame(FT_WINDOW_UPDATE, 0, sid, inc)
+                        )
                     if flags & FLAG_END_STREAM:
                         st["ended"] = True
                 st = self.streams.get(sid)
@@ -547,6 +551,9 @@ def serve_grpc_http2(
                 conn, _ = srv.accept()
             except OSError:
                 return
+            # a reply is one small write; Nagle would hold it until the
+            # peer's delayed ACK (~40 ms) instead of sending it now
+            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
             threading.Thread(
                 target=_Conn(conn, handler).run, daemon=True
             ).start()
@@ -569,6 +576,72 @@ def serve_grpc_http2(
 # Huffman-coded request headers to exercise the server's decoder)
 # ---------------------------------------------------------------------------
 
+# RFC 7540 §6.5.2 defaults, in force until the peer's SETTINGS say otherwise
+INITIAL_WINDOW = 65535
+DEFAULT_MAX_FRAME = 16384
+SETTINGS_INITIAL_WINDOW_SIZE = 0x4
+SETTINGS_MAX_FRAME_SIZE = 0x5
+
+
+class _SendWindow:
+    """The peer's flow-control state for one client stream: DATA may
+    exceed neither the connection nor the stream window (RFC 7540
+    §6.9), nor the peer's SETTINGS_MAX_FRAME_SIZE."""
+
+    def __init__(self, sock: socket.socket, sid: int):
+        self.sock = sock
+        self.sid = sid
+        self.conn = INITIAL_WINDOW
+        self.initial = INITIAL_WINDOW
+        self.stream = INITIAL_WINDOW
+        self.max_frame = DEFAULT_MAX_FRAME
+
+    def control(self, ftype: int, flags: int, sid: int, payload: bytes) -> None:
+        """Apply a connection-level frame: SETTINGS, PING,
+        WINDOW_UPDATE; GOAWAY ends the call."""
+        if ftype == FT_SETTINGS and not flags & FLAG_ACK:
+            for i in range(0, len(payload) - 5, 6):
+                ident, value = struct.unpack(">HI", payload[i:i + 6])
+                if ident == SETTINGS_INITIAL_WINDOW_SIZE:
+                    # §6.9.2: a new initial size shifts open stream windows
+                    self.stream += value - self.initial
+                    self.initial = value
+                elif ident == SETTINGS_MAX_FRAME_SIZE:
+                    self.max_frame = value
+            self.sock.sendall(pack_frame(FT_SETTINGS, FLAG_ACK, 0, b""))
+        elif ftype == FT_PING and not flags & FLAG_ACK:
+            self.sock.sendall(pack_frame(FT_PING, FLAG_ACK, 0, payload))
+        elif ftype == FT_WINDOW_UPDATE:
+            inc = struct.unpack(">I", payload)[0] & 0x7FFFFFFF
+            if sid == 0:
+                self.conn += inc
+            elif sid == self.sid:
+                self.stream += inc
+        elif ftype == FT_GOAWAY:
+            raise ConnectionError("peer sent GOAWAY")
+
+    def send_data(self, body: bytes) -> None:
+        """Send `body` as DATA frames ending the stream, waiting for
+        WINDOW_UPDATE whenever either window is spent."""
+        pos = 0
+        while True:
+            room = min(self.max_frame, self.conn, self.stream)
+            if room <= 0 and pos < len(body):
+                self.control(*read_frame(self.sock))
+                continue
+            chunk = body[pos:pos + room]
+            pos += len(chunk)
+            self.conn -= len(chunk)
+            self.stream -= len(chunk)
+            last = pos >= len(body)
+            self.sock.sendall(
+                pack_frame(FT_DATA, FLAG_END_STREAM if last else 0,
+                           self.sid, chunk)
+            )
+            if last:
+                return
+
+
 def grpc_http2_call(
     host: str,
     port: int,
@@ -580,6 +653,7 @@ def grpc_http2_call(
     """Unary gRPC call over h2c. Returns (response_bytes, grpc_status,
     grpc_message)."""
     sock = socket.create_connection((host, port), timeout=timeout)
+    sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
     try:
         sock.sendall(PREFACE + pack_frame(FT_SETTINGS, 0, 0, b""))
         enc = HpackEncoder(huffman=huffman)
@@ -594,23 +668,15 @@ def grpc_http2_call(
             ]
         )
         sid = 1
-        sock.sendall(
-            pack_frame(FT_HEADERS, FLAG_END_HEADERS, sid, req_headers)
-            + pack_frame(
-                FT_DATA, FLAG_END_STREAM, sid, _grpc_frame(request_bytes)
-            )
-        )
+        sock.sendall(pack_frame(FT_HEADERS, FLAG_END_HEADERS, sid, req_headers))
+        window = _SendWindow(sock, sid)
+        window.send_data(_grpc_frame(request_bytes))
         dec = HpackDecoder()
         body = b""
         grpc_status, grpc_msg = -1, ""
         while True:
             ftype, flags, fsid, payload = read_frame(sock)
-            if ftype == FT_SETTINGS:
-                if not flags & FLAG_ACK:
-                    sock.sendall(pack_frame(FT_SETTINGS, FLAG_ACK, 0, b""))
-            elif ftype == FT_PING and not flags & FLAG_ACK:
-                sock.sendall(pack_frame(FT_PING, FLAG_ACK, 0, payload))
-            elif ftype == FT_DATA and fsid == sid:
+            if ftype == FT_DATA and fsid == sid:
                 body += _strip_padding(flags, payload, False)
             elif ftype == FT_HEADERS and fsid == sid:
                 fields = dec.decode(_strip_padding(flags, payload, True))
@@ -623,6 +689,8 @@ def grpc_http2_call(
                     break
             elif ftype == FT_GOAWAY:
                 break
+            else:
+                window.control(ftype, flags, fsid, payload)
         msgs = _grpc_unframe(body)
         return (msgs[0] if msgs else b""), grpc_status, grpc_msg
     finally:

@@ -292,7 +292,9 @@ _LOADED = False
 
 
 def _load_all() -> None:
-    """Import every module that registers queries (idempotent)."""
+    """Import every module that registers queries (idempotent). An
+    import error propagates: a broken module must fail loudly, not
+    silently drop every entry it registers."""
     global _LOADED
     if _LOADED:
         return
@@ -321,10 +323,7 @@ def _load_all() -> None:
         "lifecycle",
         "merge_engines",
     ):
-        try:
-            __import__(f"clickhouse_observability_spark.queries.{mod}")
-        except ImportError:
-            pass  # module lands in a later milestone
+        __import__(f"clickhouse_observability_spark.queries.{mod}")
     _LOADED = True
 
 

@@ -4,7 +4,8 @@ Reference semantics (internal/batcher/batcher.go, SURVEY.md §2.9):
 
   ST1 size-or-time trigger: flush at >=500 buffered entries OR every
       100 ms tick (batcher.go:62-75; defaults main.go:28-29).
-  ST2 bounded-buffer backpressure: channel cap 4x batch (batcher.go:28).
+  ST2 bounded-buffer backpressure: channel cap 4x batch (batcher.go:28)
+      — the producer-side buffer, not a flush size.
   ST3 fire-and-forget flush: detached goroutine, errors discarded ->
       at-most-once (batcher.go:51-60).
   ST4 reply = accepted count, before persistence (service.go:45-46).
@@ -14,8 +15,13 @@ Reference semantics (internal/batcher/batcher.go, SURVEY.md §2.9):
 Spark mapping: Structured Streaming has no compound size-OR-time
 trigger, so we use the idiomatic equivalent — a 100 ms processing-time
 trigger with a per-trigger size cap on the source (maxFilesPerTrigger
-here; maxOffsetsPerTrigger on Kafka). Backpressure (ST2) is source-side
-rate limiting rather than a user-space buffer. foreachBatch writes are
+here; maxOffsetsPerTrigger on Kafka). The cap is a row budget,
+TRIGGER_MAX_ROWS: it bounds the size of ONE micro-batch, not the drain
+rate, so a backlog of many small calls drains in one trigger and pays
+the fixed per-trigger cost once. The reference's 4x-batch channel
+(ST2) sizes the producer-side buffer, not a flush, so it does not size
+a trigger either; here the buffer is the inbox on disk, not a
+user-space queue that blocks producers. foreachBatch writes are
 synchronous and checkpointed, and appends are BATCH-ID IDEMPOTENT:
 each committed micro-batch writes a batch-id marker to a
 committed-batches sidecar next to the checkpoint, and a retried
@@ -46,6 +52,9 @@ from clickhouse_observability_spark.sources.writer import LogsTable, normalize_i
 
 DEFAULT_FLUSH_EVERY_MS = 100  # main.go:29 INGEST_MAX_DELAY_MS
 DEFAULT_FLUSH_SIZE = 500  # main.go:28 INGEST_BATCH_SIZE
+# Rows one micro-batch may take by default: 64 inbox files at the
+# reference's 500-row batch.
+TRIGGER_MAX_ROWS = 32_000
 
 
 def _env_int(name: str, default: int) -> int:
@@ -74,7 +83,7 @@ class IngestStream:
         inbox_dir: str,
         checkpoint_dir: str,
         flush_every_ms: int | None = None,
-        max_files_per_trigger: int = 4,  # ST2: per-trigger size cap
+        max_files_per_trigger: int | None = None,  # per-trigger size cap
         flush_size: int | None = None,
         views: list | None = None,  # RollupView-likes, applied per batch
         maintain_indexes: bool = False,
@@ -84,9 +93,11 @@ class IngestStream:
         """Knob defaults follow the reference's env-var config
         (cmd/server/main.go:25-29): INGEST_MAX_DELAY_MS -> trigger
         interval, INGEST_BATCH_SIZE -> rows per inbox file (one file ≅
-        one batch, so maxFilesPerTrigger=4 caps a trigger at 4 batches
-        — the reference's channel capacity, batcher.go:28). Explicit
-        arguments win over env."""
+        one call's batch). max_files_per_trigger defaults to the row
+        budget TRIGGER_MAX_ROWS // flush_size, so one micro-batch holds
+        at most ~TRIGGER_MAX_ROWS rows however many calls are waiting;
+        it bounds a batch's size, not how fast the inbox drains.
+        Explicit arguments win over env and over the budget."""
         self.spark = spark
         self.table = table
         self.inbox_dir = inbox_dir
@@ -104,17 +115,22 @@ class IngestStream:
             if flush_size is not None
             else _env_int("INGEST_BATCH_SIZE", DEFAULT_FLUSH_SIZE),
         )
-        self.max_files_per_trigger = max_files_per_trigger
+        self.max_files_per_trigger = (
+            max_files_per_trigger
+            if max_files_per_trigger is not None
+            else max(1, TRIGGER_MAX_ROWS // self.flush_size)
+        )
         # Micro-batch write width (r13, guide §6): the file source
         # hands foreachBatch one partition PER INBOX FILE, so a
         # 16-file trigger of 500-row files wrote ~16 tasks x months
         # tiny parquet files per batch — task-launch + commit-rename
         # overhead per trigger AND a small-files at-rest layout that
         # every later scan pays for. A micro-batch is bounded by
-        # flush_size x max_files_per_trigger rows, so a few write
-        # tasks are plenty at any deployment size; the knob stays
-        # env-tunable (INGEST_WRITE_PARTITIONS, 0 = keep source
-        # partitioning) for streams configured with huge triggers.
+        # flush_size x max_files_per_trigger rows (~TRIGGER_MAX_ROWS
+        # by default), so a few write tasks are plenty at any
+        # deployment size; the knob stays env-tunable
+        # (INGEST_WRITE_PARTITIONS, 0 = keep source partitioning) for
+        # streams configured with huge triggers.
         # NOTE (r14, advisor): coalesce has no shuffle boundary, so
         # it narrows the WHOLE micro-batch — normalization, view and
         # index maintenance included, not just the write. That is
@@ -159,7 +175,7 @@ class IngestStream:
         """Enqueue a batch; returns the ACCEPTED count immediately,
         before any flush happens (service.go:45-46 contract). Large
         submissions split into flush_size-row files so the per-trigger
-        file cap translates to the reference's entry-count batching."""
+        file cap translates to a row budget."""
         rows = list(rows)
         if not rows:
             return 0

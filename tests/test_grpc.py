@@ -495,6 +495,100 @@ def test_grpc_http2_reflection_list_services(grpc_h2):
     assert R.REFLECTION_SERVICE_FULL.encode() in resp
 
 
+def test_grpc_http2_accepted_connection_sets_nodelay(grpc_h2, monkeypatch):
+    """Accepted h2c sockets disable Nagle, so a reply is not held back
+    until the client's delayed ACK."""
+    import socket
+
+    from clickhouse_observability_spark.api import http2_transport as H
+
+    seen = []
+    run = H._Conn.run
+
+    def recording_run(self):
+        seen.append(self.sock.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY))
+        run(self)
+
+    monkeypatch.setattr(H._Conn, "run", recording_run)
+    _, port = grpc_h2
+    assert H.batch_write_http2("127.0.0.1", port, []) == 0
+    assert seen == [1]
+
+
+def _big_batch(n=400):
+    """A BatchWrite whose request body exceeds the 65,535-byte initial
+    HTTP/2 flow-control window."""
+    entries = [
+        {"ts": "2025-09-01T10:00:00Z", "service": "orders", "level": "INFO",
+         "msg": f"{i:04d}" + "x" * 200, "attrs": {"user": f"u{i}"},
+         "trace_id": f"t{i}", "span_id": f"s{i}"}
+        for i in range(n)
+    ]
+    assert len(G.encode_batch_write_request(entries)) > 65535
+    return entries
+
+
+def test_grpc_http2_batch_write_beyond_initial_window(grpc_h2):
+    """The client spends the initial window, waits, and the server's
+    WINDOW_UPDATEs refill it until the whole body is through."""
+    from clickhouse_observability_spark.api import http2_transport as H
+
+    table, port = grpc_h2
+    assert H.batch_write_http2("127.0.0.1", port, _big_batch()) == 400
+    assert table.read().count() == 400
+
+
+def test_grpc_http2_client_respects_peer_flow_control():
+    """Against a peer that refills its window only once it is spent,
+    the in-repo client never sends DATA beyond the window or the
+    default 16,384-byte max frame size (RFC 7540 §6.9, §4.2)."""
+    import socket
+    import struct
+
+    from clickhouse_observability_spark.api import http2_transport as H
+
+    srv = socket.create_server(("127.0.0.1", 0))
+    frames, overruns = [], []
+
+    def peer():
+        conn, _ = srv.accept()
+        with conn:
+            H._read_exact(conn, len(H.PREFACE))
+            conn.sendall(H.pack_frame(H.FT_SETTINGS, 0, 0, b""))
+            window, body = H.INITIAL_WINDOW, b""
+            while True:
+                ftype, flags, sid, payload = H.read_frame(conn)
+                if ftype != H.FT_DATA:
+                    continue
+                frames.append(len(payload))
+                if len(payload) > min(window, H.DEFAULT_MAX_FRAME):
+                    overruns.append(len(payload))
+                window -= len(payload)
+                body += payload
+                if flags & H.FLAG_END_STREAM:
+                    break
+                if window <= 0:
+                    inc = struct.pack(">I", H.INITIAL_WINDOW)
+                    conn.sendall(H.pack_frame(H.FT_WINDOW_UPDATE, 0, 0, inc)
+                                 + H.pack_frame(H.FT_WINDOW_UPDATE, 0, sid, inc))
+                    window = H.INITIAL_WINDOW
+            rows = G.decode_batch_write_request(H._grpc_unframe(body)[0])
+            reply = G.encode_batch_write_response(len(rows))
+            H._Conn(conn, None)._send_response(sid, H._grpc_frame(reply), 0, "")
+
+    t = threading.Thread(target=peer, daemon=True)
+    t.start()
+    try:
+        port = srv.getsockname()[1]
+        assert H.batch_write_http2("127.0.0.1", port, _big_batch()) == 400
+        t.join(10)
+        assert not t.is_alive()
+    finally:
+        srv.close()
+    assert not overruns
+    assert len(frames) > 4  # the body crossed at least one refill
+
+
 # Raw bytes of a stock-client-shaped h2c BatchWrite session, checked
 # in verbatim. The layout is what a stock gRPC client (the grpc-go
 # family) actually puts on the wire per the public gRPC

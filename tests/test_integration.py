@@ -6,6 +6,9 @@ flow."""
 from __future__ import annotations
 
 import datetime as dt
+import sys
+
+import pytest
 
 from clickhouse_observability_spark.api.http import LogsApi
 from clickhouse_observability_spark.operators.query_logs import query_logs
@@ -402,6 +405,19 @@ def test_adjudication_window_composition():
         "tpch_q22_dormant_customers",
     ):
         assert merged in oracles and merged not in registry._WINDOW_ORDER, merged
+
+
+def test_registry_load_propagates_import_errors(monkeypatch):
+    """A query module that fails to import must fail registry loading,
+    not silently drop every entry it registers."""
+    from clickhouse_observability_spark import registry
+
+    broken = "clickhouse_observability_spark.queries.merge_engines"
+    monkeypatch.setattr(registry, "_LOADED", False)
+    monkeypatch.setitem(sys.modules, broken, None)  # import raises
+    with pytest.raises(ImportError, match="merge_engines"):
+        registry.queries()
+    assert registry._LOADED is False
 
 
 def test_window_schemas_are_atomic(spark, sf_small):

@@ -132,6 +132,8 @@ def test_compact_preserves_answers(spark, stream):
     s.submit_many(_rows(120))
     s.submit_many(_rows(120, start=120))
     s.submit_many(_rows(120, start=240))
+    # 6 inbox files, at most 4 per trigger: at least two increments
+    s.max_files_per_trigger = 4
     s.start()
     s.query.processAllAvailable()
     s.stop(drain=False)

@@ -61,6 +61,30 @@ def test_full_lifecycle(engine):
     assert body["logs"][0]["Attrs"] == {"user": "jane.smith"}
 
 
+def test_server_sockets_disable_nagle(engine, monkeypatch):
+    """The LogsApi and gRPC-Web handlers set TCP_NODELAY on every
+    accepted socket: a reply is written as headers then body, and Nagle
+    would hold the body until the client's delayed ACK (~40 ms)."""
+    import socket
+
+    seen = {}
+    for name, srv in (("http", engine._http_server),
+                      ("grpc-web", engine._grpc_server)):
+        cls = srv.RequestHandlerClass
+        orig = cls.setup
+
+        def setup(self, orig=orig, name=name):
+            orig(self)
+            seen[name] = self.connection.getsockopt(
+                socket.IPPROTO_TCP, socket.TCP_NODELAY)
+
+        monkeypatch.setattr(cls, "setup", setup)
+    http_port, grpc_port = engine.ports
+    assert _get(http_port, "/live")[0] == 200
+    assert grpc_web_call("127.0.0.1", grpc_port, []) == 0
+    assert seen == {"http": 1, "grpc-web": 1}
+
+
 def test_graceful_stop_drains(spark, tmp_path):
     srv = EngineServer(
         spark, data_dir=str(tmp_path / "d2"), http_addr=":0", grpc_addr=":0"

@@ -142,19 +142,52 @@ def test_batch_retry_admits_no_duplicates(spark, tmp_path):
     assert table.read().count() == 5
 
 
-def test_per_trigger_size_cap(stream):
+def _data_batches(q, rows, timeout=30):
+    """Progress of the micro-batches that read data, once their
+    numInputRows add up to `rows` (progress lands after the commit)."""
+    deadline = time.time() + timeout
+    while True:
+        batches = [p for p in q.recentProgress if p.numInputRows > 0]
+        if sum(p.numInputRows for p in batches) >= rows or time.time() > deadline:
+            return batches
+        time.sleep(0.2)
+
+
+def test_per_trigger_size_cap(spark, tmp_path):
     # ST1/ST2: maxFilesPerTrigger bounds each micro-batch (size cap);
     # many small files still all arrive, just over multiple triggers.
+    table = LogsTable(spark, str(tmp_path / "logs"))
+    table.init_schema()
+    s = IngestStream(spark, table, str(tmp_path / "inbox"),
+                     str(tmp_path / "ckpt"), max_files_per_trigger=4)
     for i in range(6):
+        s.submit_many([_wire(i * 10 + j) for j in range(2)])
+    try:
+        q = s.start()
+        q.processAllAvailable()
+        assert table.read().count() == 12
+        # batches bounded by the cap: 4 files -> ≤8 rows each
+        batches = _data_batches(q, 12)
+        assert len(batches) >= 2
+        assert all(p.numInputRows <= 4 * 2 for p in batches)
+    finally:
+        s.stop(drain=False)
+
+
+def test_default_row_budget_drains_backlog_in_one_trigger(stream):
+    # the default cap is a row budget (TRIGGER_MAX_ROWS // flush_size
+    # files), so a backlog of small calls drains in ONE micro-batch
+    from clickhouse_observability_spark.streaming.batcher import (
+        TRIGGER_MAX_ROWS,
+    )
+
+    assert stream.max_files_per_trigger == TRIGGER_MAX_ROWS // stream.flush_size
+    for i in range(10):
         stream.submit_many([_wire(i * 10 + j) for j in range(2)])
     q = stream.start()
-    deadline = time.time() + 60
-    while time.time() < deadline and stream.table.read().count() < 12:
-        time.sleep(0.5)
-    assert stream.table.read().count() == 12
-    # progress shows batches bounded by the cap (4 files -> ≤8 rows each)
-    n_batches = len(q.recentProgress)
-    assert n_batches >= 2
+    q.processAllAvailable()
+    assert stream.table.read().count() == 20
+    assert len(_data_batches(q, 20)) == 1
 
 
 # ---------------------------------------------------------------------------
