@@ -15,12 +15,16 @@ Reference semantics (internal/batcher/batcher.go, SURVEY.md §2.9):
 Spark mapping: Structured Streaming has no compound size-OR-time
 trigger, so we use the idiomatic equivalent — a 100 ms processing-time
 trigger with a per-trigger size cap on the source (maxFilesPerTrigger
-here; maxOffsetsPerTrigger on Kafka). The cap is a row budget,
-TRIGGER_MAX_ROWS: it bounds the size of ONE micro-batch, not the drain
-rate, so a backlog of many small calls drains in one trigger and pays
-the fixed per-trigger cost once. The reference's 4x-batch channel
-(ST2) sizes the producer-side buffer, not a flush, so it does not size
-a trigger either; here the buffer is the inbox on disk, not a
+here; maxOffsetsPerTrigger on Kafka). The cap is a file count
+derived from flush_size, TRIGGER_MAX_ROWS // flush_size: an inbox file
+holds at most flush_size rows, so one micro-batch holds at most
+TRIGGER_MAX_ROWS rows. It bounds the size of ONE micro-batch, not the
+drain rate, so a backlog of many calls drains in one trigger and pays
+the fixed per-trigger cost once. A call smaller than flush_size still
+takes a whole file, so small-call traffic is capped by call count (64
+calls per trigger at the default sizes). The reference's 4x-batch
+channel (ST2) sizes the producer-side buffer, not a flush, so it does
+not size a trigger either; here the buffer is the inbox on disk, not a
 user-space queue that blocks producers. foreachBatch writes are
 synchronous and checkpointed, and appends are BATCH-ID IDEMPOTENT:
 each committed micro-batch writes a batch-id marker to a
@@ -52,8 +56,9 @@ from clickhouse_observability_spark.sources.writer import LogsTable, normalize_i
 
 DEFAULT_FLUSH_EVERY_MS = 100  # main.go:29 INGEST_MAX_DELAY_MS
 DEFAULT_FLUSH_SIZE = 500  # main.go:28 INGEST_BATCH_SIZE
-# Rows one micro-batch may take by default: 64 inbox files at the
-# reference's 500-row batch.
+# Upper bound on the rows of one micro-batch, turned into a file cap
+# of TRIGGER_MAX_ROWS // flush_size (64 inbox files at the reference's
+# 500-row batch).
 TRIGGER_MAX_ROWS = 32_000
 
 
@@ -93,10 +98,10 @@ class IngestStream:
         """Knob defaults follow the reference's env-var config
         (cmd/server/main.go:25-29): INGEST_MAX_DELAY_MS -> trigger
         interval, INGEST_BATCH_SIZE -> rows per inbox file (one file ≅
-        one call's batch). max_files_per_trigger defaults to the row
-        budget TRIGGER_MAX_ROWS // flush_size, so one micro-batch holds
-        at most ~TRIGGER_MAX_ROWS rows however many calls are waiting;
-        it bounds a batch's size, not how fast the inbox drains.
+        one call's batch). max_files_per_trigger defaults to the file
+        cap TRIGGER_MAX_ROWS // flush_size, so one micro-batch holds at
+        most TRIGGER_MAX_ROWS rows however many calls are waiting; it
+        bounds a batch's size, not how fast the inbox drains.
         Explicit arguments win over env and over the budget."""
         self.spark = spark
         self.table = table
@@ -126,7 +131,7 @@ class IngestStream:
         # tiny parquet files per batch — task-launch + commit-rename
         # overhead per trigger AND a small-files at-rest layout that
         # every later scan pays for. A micro-batch is bounded by
-        # flush_size x max_files_per_trigger rows (~TRIGGER_MAX_ROWS
+        # flush_size x max_files_per_trigger rows (TRIGGER_MAX_ROWS
         # by default), so a few write tasks are plenty at any
         # deployment size; the knob stays env-tunable
         # (INGEST_WRITE_PARTITIONS, 0 = keep source partitioning) for
@@ -175,7 +180,7 @@ class IngestStream:
         """Enqueue a batch; returns the ACCEPTED count immediately,
         before any flush happens (service.go:45-46 contract). Large
         submissions split into flush_size-row files so the per-trigger
-        file cap translates to a row budget."""
+        file cap bounds a micro-batch's rows."""
         rows = list(rows)
         if not rows:
             return 0

@@ -174,9 +174,9 @@ def test_per_trigger_size_cap(spark, tmp_path):
         s.stop(drain=False)
 
 
-def test_default_row_budget_drains_backlog_in_one_trigger(stream):
-    # the default cap is a row budget (TRIGGER_MAX_ROWS // flush_size
-    # files), so a backlog of small calls drains in ONE micro-batch
+def test_default_file_cap_drains_backlog_in_one_trigger(stream):
+    # the default cap is TRIGGER_MAX_ROWS // flush_size files, so a
+    # 10-file backlog drains in ONE micro-batch
     from clickhouse_observability_spark.streaming.batcher import (
         TRIGGER_MAX_ROWS,
     )
