@@ -114,37 +114,67 @@ def _skip_field(buf: bytes, pos: int, wire_type: int) -> int:
     return pos
 
 
+# LogEntry string fields by their one-byte tag (field_no << 3 | LEN)
+_ENTRY_STR_TAGS = {0x0A: "ts", 0x12: "service", 0x1A: "level", 0x22: "msg",
+                   0x32: "trace_id", 0x3A: "span_id"}
+_ATTRS_TAG = 0x2A  # field 5, LEN: one map entry {1: key, 2: value}
+
+
 def decode_log_entry(buf: bytes) -> dict:
+    return _decode_log_entry(buf, 0, len(buf))
+
+
+def _decode_log_entry(buf: bytes, pos: int, end: int) -> dict:
+    """LogEntry in buf[pos:end]. BatchWrite decodes hundreds of these
+    on the ack path, so one-byte varints (every tag here and every
+    length under 128) are read inline instead of through
+    _decode_varint."""
     entry = {
         "ts": "", "service": "", "level": "", "msg": "",
         "attrs": {}, "trace_id": "", "span_id": "",
     }
-    names = {1: "ts", 2: "service", 3: "level", 4: "msg", 6: "trace_id", 7: "span_id"}
-    pos = 0
-    while pos < len(buf):
-        key, pos = _decode_varint(buf, pos)
-        field_no, wt = key >> 3, key & 7
-        if field_no in names and wt == _WT_LEN:
+    attrs = entry["attrs"]
+    while pos < end:
+        key = buf[pos]
+        if key < 0x80:
+            pos += 1
+        else:
+            key, pos = _decode_varint(buf, pos)
+        if key & 7 != _WT_LEN:
+            pos = _skip_field(buf, pos, key & 7)
+            continue
+        ln = buf[pos]
+        if ln < 0x80:
+            pos += 1
+        else:
             ln, pos = _decode_varint(buf, pos)
-            entry[names[field_no]] = buf[pos:pos + ln].decode("utf-8")
-            pos += ln
-        elif field_no == 5 and wt == _WT_LEN:
-            ln, pos = _decode_varint(buf, pos)
-            k, v, mp = "", "", pos
-            end = pos + ln
-            while mp < end:
-                mkey, mp = _decode_varint(buf, mp)
-                mln, mp = _decode_varint(buf, mp)
-                s = buf[mp:mp + mln].decode("utf-8")
-                mp += mln
+        stop = pos + ln
+        if stop > end:  # a malformed length never reads the next entry
+            stop = end
+        name = _ENTRY_STR_TAGS.get(key)
+        if name is not None:
+            entry[name] = buf[pos:stop].decode("utf-8")
+        elif key == _ATTRS_TAG:
+            k, v = "", ""
+            while pos < stop:
+                mkey = buf[pos]
+                if mkey < 0x80:
+                    pos += 1
+                else:
+                    mkey, pos = _decode_varint(buf, pos)
+                mln = buf[pos]
+                if mln < 0x80:
+                    pos += 1
+                else:
+                    mln, pos = _decode_varint(buf, pos)
+                s = buf[pos:min(pos + mln, stop)].decode("utf-8")
+                pos += mln
                 if mkey >> 3 == 1:
                     k = s
                 else:
                     v = s
-            entry["attrs"][k] = v
-            pos = end
-        else:
-            pos = _skip_field(buf, pos, wt)
+            attrs[k] = v
+        pos = stop
     return entry
 
 
@@ -154,12 +184,12 @@ def encode_batch_write_request(entries: list[Mapping]) -> bytes:
 
 def decode_batch_write_request(buf: bytes) -> list[dict]:
     entries = []
-    pos = 0
-    while pos < len(buf):
+    pos, end = 0, len(buf)
+    while pos < end:
         key, pos = _decode_varint(buf, pos)
         if key >> 3 == 1 and key & 7 == _WT_LEN:
             ln, pos = _decode_varint(buf, pos)
-            entries.append(decode_log_entry(buf[pos:pos + ln]))
+            entries.append(_decode_log_entry(buf, pos, pos + ln))
             pos += ln
         else:
             pos = _skip_field(buf, pos, key & 7)

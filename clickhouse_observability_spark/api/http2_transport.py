@@ -341,6 +341,12 @@ FLAG_PADDED = 0x8
 FLAG_PRIORITY = 0x20
 FLAG_ACK = 0x1
 
+# RFC 7540 §6.5.2 defaults, in force until the peer's SETTINGS say otherwise
+INITIAL_WINDOW = 65535
+DEFAULT_MAX_FRAME = 16384
+SETTINGS_INITIAL_WINDOW_SIZE = 0x4
+SETTINGS_MAX_FRAME_SIZE = 0x5
+
 
 def pack_frame(ftype: int, flags: int, stream_id: int, payload: bytes) -> bytes:
     return (
@@ -406,6 +412,15 @@ def _grpc_unframe(body: bytes) -> list[bytes]:
 # server
 # ---------------------------------------------------------------------------
 
+# The receive window the server grants the connection and each stream
+# (RFC 7540 §6.9.2). A BatchWrite body of hundreds of rows is larger
+# than the 65,535-byte default, and with the default the client stalls
+# mid-upload until this connection's reader thread is scheduled and
+# sends WINDOW_UPDATE; with 1 MiB a whole body goes out at once. Read
+# bytes are handed back once half a window is spent.
+RECV_WINDOW = 1 << 20
+
+
 class _Conn:
     def __init__(self, sock: socket.socket, handler: LogServiceHandler):
         self.sock = sock
@@ -414,6 +429,7 @@ class _Conn:
         self.encoder = HpackEncoder()
         self.streams: dict[int, dict] = {}
         self.lock = threading.Lock()
+        self.conn_spent = 0  # DATA bytes read since the last conn refill
 
     def _send(self, data: bytes) -> None:
         with self.lock:
@@ -423,7 +439,12 @@ class _Conn:
         try:
             if _read_exact(self.sock, len(PREFACE)) != PREFACE:
                 return
-            self._send(pack_frame(FT_SETTINGS, 0, 0, b""))
+            self._send(
+                pack_frame(FT_SETTINGS, 0, 0, struct.pack(
+                    ">HI", SETTINGS_INITIAL_WINDOW_SIZE, RECV_WINDOW))
+                + pack_frame(FT_WINDOW_UPDATE, 0, 0, struct.pack(
+                    ">I", RECV_WINDOW - INITIAL_WINDOW))
+            )
             while True:
                 ftype, flags, sid, payload = read_frame(self.sock)
                 if ftype == FT_SETTINGS:
@@ -439,7 +460,7 @@ class _Conn:
                 elif ftype == FT_HEADERS:
                     st = self.streams.setdefault(
                         sid, {"hblock": b"", "data": b"", "hdone": False,
-                              "ended": False, "headers": []}
+                              "ended": False, "headers": [], "spent": 0}
                     )
                     st["hblock"] += _strip_padding(flags, payload, True)
                     if flags & FLAG_END_STREAM:
@@ -462,18 +483,10 @@ class _Conn:
                     st = self.streams.get(sid)
                     if st is None:
                         continue
-                    body = _strip_padding(flags, payload, False)
-                    st["data"] += body
-                    if body:
-                        # open the flow-control window back up (conn +
-                        # stream) in one write
-                        inc = struct.pack(">I", len(body))
-                        self._send(
-                            pack_frame(FT_WINDOW_UPDATE, 0, 0, inc)
-                            + pack_frame(FT_WINDOW_UPDATE, 0, sid, inc)
-                        )
+                    st["data"] += _strip_padding(flags, payload, False)
                     if flags & FLAG_END_STREAM:
                         st["ended"] = True
+                    self._refill(sid, st, len(payload))
                 st = self.streams.get(sid)
                 if st and st["hdone"] and st["ended"]:
                     del self.streams[sid]
@@ -485,6 +498,25 @@ class _Conn:
                 self.sock.close()
             except OSError:
                 pass
+
+    def _refill(self, sid: int, st: dict, n: int) -> None:
+        """Count n flow-controlled bytes (padding included, §6.9.1)
+        against the connection and stream windows; hand the spent
+        bytes back in one write once half of either window is used.
+        A stream that has ended gets no more DATA, so no refill."""
+        self.conn_spent += n
+        st["spent"] += n
+        out = b""
+        if self.conn_spent >= RECV_WINDOW // 2:
+            out += pack_frame(FT_WINDOW_UPDATE, 0, 0,
+                              struct.pack(">I", self.conn_spent))
+            self.conn_spent = 0
+        if st["spent"] >= RECV_WINDOW // 2 and not st["ended"]:
+            out += pack_frame(FT_WINDOW_UPDATE, 0, sid,
+                              struct.pack(">I", st["spent"]))
+            st["spent"] = 0
+        if out:
+            self._send(out)
 
     def _respond(self, sid: int, st: dict) -> None:
         from clickhouse_observability_spark.api.grpc_reflection import (
@@ -575,13 +607,6 @@ def serve_grpc_http2(
 # client (for e2e tests: a genuine HTTP/2 exchange, optionally with
 # Huffman-coded request headers to exercise the server's decoder)
 # ---------------------------------------------------------------------------
-
-# RFC 7540 §6.5.2 defaults, in force until the peer's SETTINGS say otherwise
-INITIAL_WINDOW = 65535
-DEFAULT_MAX_FRAME = 16384
-SETTINGS_INITIAL_WINDOW_SIZE = 0x4
-SETTINGS_MAX_FRAME_SIZE = 0x5
-
 
 class _SendWindow:
     """The peer's flow-control state for one client stream: DATA may

@@ -37,6 +37,31 @@ from clickhouse_observability_spark.sources.writer import LogsTable
 from clickhouse_observability_spark.streaming.batcher import IngestStream
 
 
+# Nice value of the Spark JVM that main() starts; the server's own
+# threads stay at 0. BatchWrite acks and HTTP request handling are short
+# bursts of Python in this process, while Spark's scans and
+# micro-batches can keep every core busy. At equal priority an ack
+# shares a core with Spark's task threads, so its latency follows
+# whatever Spark is doing at that moment. At nice 10 a request thread
+# gets about nine times a JVM thread's CPU share (CFS weights 1024 and
+# 110), and the JVM still gets every cycle the request threads leave.
+SPARK_NICE = 10
+
+
+def renice_threads(pid: int, nice: int) -> None:
+    """Set the nice value of every thread of process `pid`. Linux keeps
+    it per thread, and a thread started later inherits its creator's."""
+    try:
+        tids = os.listdir(f"/proc/{pid}/task")
+    except OSError:  # no /proc, or the process is gone
+        return
+    for tid in tids:
+        try:
+            os.setpriority(os.PRIO_PROCESS, int(tid), nice)
+        except OSError:  # the thread has exited
+            pass
+
+
 def _addr(raw: str, default_port: int) -> tuple[str, int]:
     host, _, port = raw.rpartition(":")
     return host or "127.0.0.1", int(port) if port else default_port
@@ -169,7 +194,13 @@ class EngineServer:
 def main() -> None:  # pragma: no cover - manual entry point
     from clickhouse_observability_spark.session import get_spark
 
-    EngineServer(get_spark("chobs-server")).start().run_until_signal()
+    spark = get_spark("chobs-server")
+    server = EngineServer(spark).start()
+    # after start-up, so the boot itself runs at full priority
+    jvm = getattr(spark.sparkContext._gateway, "proc", None)  # pyspark's Popen
+    if jvm is not None:
+        renice_threads(jvm.pid, SPARK_NICE)
+    server.run_until_signal()
 
 
 if __name__ == "__main__":  # pragma: no cover

@@ -189,9 +189,10 @@ class IngestStream:
             name = uuid.uuid4().hex
             tmp = os.path.join(self.inbox_dir, f".{name}.jsonl.tmp")
             dst = os.path.join(self.inbox_dir, f"{name}.jsonl")
+            # one write per file: this runs on the ack path
+            text = "".join([json.dumps(dict(r)) + "\n" for r in chunk])
             with open(tmp, "w") as f:
-                for r in chunk:
-                    f.write(json.dumps(dict(r)) + "\n")
+                f.write(text)
             os.rename(tmp, dst)  # atomic publish: the source never reads partials
         return len(rows)
 

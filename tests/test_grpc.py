@@ -35,6 +35,18 @@ def test_codec_round_trip_edge_cases():
     assert got == entries
 
 
+def test_codec_multibyte_lengths_and_overlong_field():
+    # a 200-byte msg and a 150-byte attr value take two-byte length
+    # varints; a string length running past its entry's end stops at
+    # that end instead of reading into the next entry
+    entries = [{"ts": "", "service": "", "level": "", "msg": "m" * 200,
+                "attrs": {"k": "v" * 150}, "trace_id": "", "span_id": ""}]
+    assert G.decode_batch_write_request(G.encode_batch_write_request(entries)) == entries
+    overlong = b"\x0a\x04" + b"\x0a\x05ab" + G._len_field(1, G.encode_log_entry({"ts": "t2"}))
+    got = G.decode_batch_write_request(overlong)
+    assert [e["ts"] for e in got] == ["ab", "t2"]
+
+
 @pytest.mark.parametrize("n", [0, 1, 127, 128, 300, 2**32, 2**63 - 1])
 def test_response_varint_round_trip(n):
     assert G.decode_batch_write_response(G.encode_batch_write_response(n)) == n
@@ -529,13 +541,27 @@ def _big_batch(n=400):
 
 
 def test_grpc_http2_batch_write_beyond_initial_window(grpc_h2):
-    """The client spends the initial window, waits, and the server's
-    WINDOW_UPDATEs refill it until the whole body is through."""
+    """The client spends the default initial window, waits, and the
+    server's larger window (SETTINGS + connection WINDOW_UPDATE) lets
+    the rest of the body through."""
     from clickhouse_observability_spark.api import http2_transport as H
 
     table, port = grpc_h2
     assert H.batch_write_http2("127.0.0.1", port, _big_batch()) == 400
     assert table.read().count() == 400
+
+
+def test_grpc_http2_server_refills_spent_window(grpc_h2, monkeypatch):
+    """A body several times the server's receive window goes through
+    only if the server hands read bytes back with WINDOW_UPDATE."""
+    from clickhouse_observability_spark.api import http2_transport as H
+
+    monkeypatch.setattr(H, "RECV_WINDOW", 1 << 17)
+    table, port = grpc_h2
+    entries = _big_batch(1500)
+    assert len(G.encode_batch_write_request(entries)) > 2 * H.RECV_WINDOW
+    assert H.batch_write_http2("127.0.0.1", port, entries) == 1500
+    assert table.read().count() == 1500
 
 
 def test_grpc_http2_client_respects_peer_flow_control():

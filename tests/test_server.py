@@ -149,3 +149,34 @@ def test_stop_flushes_query_log_to_data_dir(spark, tmp_path):
     at_rest = spark.read.parquet(str(tmp_path / "data" / "query_log"))
     rows = at_rest.collect()
     assert any(r.route == "/v1/logs" and r.status == 200 for r in rows)
+
+
+def test_renice_threads_sets_every_thread():
+    """renice_threads reaches each thread of the target process, not
+    only its main thread (Linux keeps the nice value per thread)."""
+    import os
+    import subprocess
+    import sys
+
+    from clickhouse_observability_spark.server import renice_threads
+
+    child = subprocess.Popen(
+        [sys.executable, "-c",
+         "import sys, threading, time\n"
+         "for _ in range(3):\n"
+         "    threading.Thread(target=time.sleep, args=(60,), daemon=True).start()\n"
+         "print('up', flush=True)\n"
+         "time.sleep(60)\n"],
+        stdout=subprocess.PIPE,
+    )
+    try:
+        assert child.stdout.readline() == b"up\n"
+        nice = min(19, os.nice(0) + 5)  # lowering priority needs no privilege
+        renice_threads(child.pid, nice)
+        tids = [int(t) for t in os.listdir(f"/proc/{child.pid}/task")]
+        assert len(tids) == 4
+        assert {os.getpriority(os.PRIO_PROCESS, t) for t in tids} == {nice}
+    finally:
+        child.kill()
+        child.wait()
+    renice_threads(child.pid, 5)  # a process that is gone is a no-op
