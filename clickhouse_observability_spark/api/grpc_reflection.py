@@ -22,6 +22,7 @@ from __future__ import annotations
 from clickhouse_observability_spark.api.grpc_transport import (
     _decode_varint,
     _len_field,
+    _skip_field,
     _str_field,
     _tag,
     _encode_varint,
@@ -156,15 +157,7 @@ def _decode_reflection_request(buf: bytes) -> tuple[str, str]:
                 arm = "other"
             pos += ln
         else:
-            # varint/fixed fields: skip
-            if wt == _WT_VARINT:
-                _, pos = _decode_varint(buf, pos)
-            elif wt == 1:
-                pos += 8
-            elif wt == 5:
-                pos += 4
-            else:
-                raise ValueError(f"bad wire type {wt}")
+            pos = _skip_field(buf, pos, wt)
     return arm, val
 
 

@@ -1,4 +1,4 @@
-"""gRPC `logs.v1.LogService/BatchWrite` transport (SURVEY.md §2.11).
+"""gRPC `logs.v1.LogService/BatchWrite` messages and handler (SURVEY.md §2.11).
 
 Reference wire surface: proto/log.proto:6-21 (LogEntry with string ts,
 map<string,string> attrs; BatchWriteRequest{entries}; BatchWriteResponse
@@ -19,20 +19,14 @@ dependencies:
   The ts fallback itself lives in the normalize step
   (functions/timeparse.py), exactly where the reference parses it at
   the service boundary;
-- a gRPC-Web server (`serve_grpc_web`): the gRPC framing that works
-  over HTTP/1.1 — POST /logs.v1.LogService/BatchWrite with
-  `application/grpc-web+proto` 5-byte-prefixed frames and a trailers
-  frame — servable by the stdlib HTTP server and e2e-tested with a
-  plain socket client (this container has no grpcio);
-- `serve_grpc_native`: the HTTP/2 `application/grpc` flavor via
-  grpcio's generic handler, gated behind an import-try so it lights
-  up wherever grpcio exists.
+- `METHOD_PATH`, the HTTP/2 :path the handler is served on.
+
+The transport is native `application/grpc` over h2c
+(api/http2_transport.py), as in the reference (cmd/server/main.go:74-88).
 """
 
 from __future__ import annotations
 
-import json
-import struct
 from collections.abc import Callable, Mapping
 
 # ---------------------------------------------------------------------------
@@ -120,10 +114,6 @@ _ENTRY_STR_TAGS = {0x0A: "ts", 0x12: "service", 0x1A: "level", 0x22: "msg",
 _ATTRS_TAG = 0x2A  # field 5, LEN: one map entry {1: key, 2: value}
 
 
-def decode_log_entry(buf: bytes) -> dict:
-    return _decode_log_entry(buf, 0, len(buf))
-
-
 def _decode_log_entry(buf: bytes, pos: int, end: int) -> dict:
     """LogEntry in buf[pos:end]. BatchWrite decodes hundreds of these
     on the ack path, so one-byte varints (every tag here and every
@@ -193,6 +183,8 @@ def decode_batch_write_request(buf: bytes) -> list[dict]:
             pos += ln
         else:
             pos = _skip_field(buf, pos, key & 7)
+    if pos > end:  # a truncated request is rejected, not half-submitted
+        raise ValueError("field runs past the end of the request")
     return entries
 
 
@@ -241,157 +233,6 @@ class LogServiceHandler:
 
 
 # ---------------------------------------------------------------------------
-# gRPC-Web transport (HTTP/1.1-compatible gRPC framing; stdlib-servable)
-# ---------------------------------------------------------------------------
-
-_GRPC_WEB_CT = "application/grpc-web+proto"
-
-
-def _frame(flags: int, payload: bytes) -> bytes:
-    return struct.pack(">BI", flags, len(payload)) + payload
-
-
-def unframe(body: bytes) -> list[tuple[int, bytes]]:
-    """Split a gRPC[-Web] body into (flags, payload) frames."""
-    frames = []
-    pos = 0
-    while pos + 5 <= len(body):
-        flags, ln = struct.unpack(">BI", body[pos:pos + 5])
-        frames.append((flags, body[pos + 5:pos + 5 + ln]))
-        pos += 5 + ln
-    return frames
-
-
-def serve_grpc_web(handler: LogServiceHandler, host: str = "127.0.0.1", port: int = 8081):
-    """gRPC-Web server for LogService (reference serves gRPC on :8081,
-    cmd/server/main.go:74-88). Returns the server; run
-    `server.serve_forever()` in a thread, `.shutdown()` to stop.
-
-    Unary gRPC-Web exchange: request = one 0x00 frame of
-    BatchWriteRequest bytes; response = one 0x00 frame of
-    BatchWriteResponse bytes + one 0x80 trailers frame carrying
-    `grpc-status: 0`. Errors map to grpc-status 2 (UNKNOWN) /
-    12 (UNIMPLEMENTED for unknown methods), matching grpc codes.
-
-    Server reflection is registered alongside LogService (reference
-    cmd/server/main.go:79-81): grpc.reflection.v1alpha list/describe
-    requests are answered from the hand-encoded log.proto descriptor
-    (api/grpc_reflection.py).
-    """
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-    from clickhouse_observability_spark.api.grpc_reflection import (
-        REFLECTION_METHOD_PATH,
-        handle_reflection,
-    )
-
-    methods: dict[str, Callable[[bytes], bytes]] = {
-        METHOD_PATH: handler.batch_write,
-        REFLECTION_METHOD_PATH: handle_reflection,
-    }
-
-    class Handler(BaseHTTPRequestHandler):
-        protocol_version = "HTTP/1.1"
-        # TCP_NODELAY: a reply must not wait for the client's delayed ACK
-        disable_nagle_algorithm = True
-
-        def log_message(self, *a):  # silence
-            pass
-
-        def _reply(self, payload_frames: bytes, status: int, msg: str = ""):
-            trailer = f"grpc-status: {status}\r\n"
-            if msg:
-                trailer += f"grpc-message: {msg}\r\n"
-            body = payload_frames + _frame(0x80, trailer.encode())
-            self.send_response(200)
-            self.send_header("Content-Type", _GRPC_WEB_CT)
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-        def do_POST(self):
-            method = methods.get(self.path)
-            if method is None:
-                self._reply(b"", 12, "unknown method")  # UNIMPLEMENTED
-                return
-            ln = int(self.headers.get("Content-Length", "0"))
-            frames = unframe(self.rfile.read(ln))
-            data = b"".join(p for f, p in frames if f == 0)
-            try:
-                resp = method(data)
-            except Exception as e:  # UNKNOWN
-                self._reply(b"", 2, type(e).__name__)
-                return
-            self._reply(_frame(0, resp), 0)
-
-    return ThreadingHTTPServer((host, port), Handler)
-
-
-def grpc_web_call(host: str, port: int, entries: list[Mapping]) -> int:
-    """Minimal gRPC-Web client for tests/tools: returns `written`."""
-    import http.client
-
-    body = _frame(0, encode_batch_write_request(entries))
-    conn = http.client.HTTPConnection(host, port)
-    try:
-        conn.request(
-            "POST", METHOD_PATH, body=body, headers={"Content-Type": _GRPC_WEB_CT}
-        )
-        r = conn.getresponse()
-        frames = unframe(r.read())
-    finally:
-        conn.close()
-    status = 0
-    written = 0
-    for flags, payload in frames:
-        if flags & 0x80:
-            for line in payload.decode().splitlines():
-                if line.startswith("grpc-status:"):
-                    status = int(line.split(":", 1)[1].strip())
-        else:
-            written = decode_batch_write_response(payload)
-    if status != 0:
-        raise RuntimeError(f"grpc-status {status}")
-    return written
-
-
-# ---------------------------------------------------------------------------
-# native gRPC (HTTP/2) — available wherever grpcio is installed
-# ---------------------------------------------------------------------------
-
-def serve_grpc_native(handler: LogServiceHandler, address: str = "127.0.0.1:8081"):
-    """Plain-gRPC server via grpcio's generic handler (no generated
-    stubs needed — the codec above is the (de)serializer). Gated:
-    this container ships no grpcio, so the call raises with a clear
-    message instead of importing at module load."""
-    try:
-        import grpc
-    except ImportError as e:  # pragma: no cover - env-dependent
-        raise RuntimeError(
-            "grpcio is not installed in this environment; use "
-            "serve_grpc_web (same wire messages over gRPC-Web framing)"
-        ) from e
-
-    def batch_write(request: list[dict], context):  # noqa: ANN001
-        return handler.batch_write(encode_batch_write_request(request))
-
-    rpc = grpc.unary_unary_rpc_method_handler(
-        batch_write,
-        request_deserializer=decode_batch_write_request,
-        response_serializer=lambda b: b,
-    )
-    generic = grpc.method_handlers_generic_handler(
-        "logs.v1.LogService", {"BatchWrite": rpc}
-    )
-    from concurrent import futures
-
-    server = grpc.server(futures.ThreadPoolExecutor(max_workers=4))
-    server.add_generic_rpc_handlers((generic,))
-    server.add_insecure_port(address)
-    return server
-
-
-# ---------------------------------------------------------------------------
 # round-trip sanity hook (used by tests; keeps the codec honest against
 # a reference vector captured from protobuf's canonical encoder)
 # ---------------------------------------------------------------------------
@@ -413,7 +254,3 @@ def canonical_example() -> tuple[list[dict], bytes]:
     ]
     return entries, encode_batch_write_request(entries)
 
-
-def attrs_json(entry: Mapping) -> str:
-    """Go's json.Marshal sorts map keys (db.go:160-165); mirror it."""
-    return json.dumps(dict(sorted((entry.get("attrs") or {}).items())))

@@ -17,8 +17,8 @@ their RFCs with stdlib only:
   GOAWAY handling, HEADERS(+CONTINUATION)/DATA with padding and
   priority fields, per-stream assembly, trailers.
 - gRPC-over-HTTP/2 semantics: POST :path routing, 5-byte
-  length-prefixed messages (the framing shared with grpc_transport),
-  `grpc-status` trailers, UNIMPLEMENTED for unknown methods.
+  length-prefixed messages, `grpc-status` trailers, UNIMPLEMENTED for
+  unknown methods.
 
 `serve_grpc_http2` is a real h2c socket server for LogService (unary
 BatchWrite); `grpc_http2_call` is the in-repo client that e2e-tests
@@ -33,7 +33,9 @@ import struct
 import threading
 
 from clickhouse_observability_spark.api.grpc_transport import (
+    METHOD_PATH,
     LogServiceHandler,
+    decode_batch_write_response,
     encode_batch_write_request,
 )
 
@@ -391,7 +393,7 @@ def _strip_padding(flags: int, payload: bytes, priority: bool) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# gRPC message framing (shared 5-byte prefix with grpc_transport)
+# gRPC message framing (5-byte length prefix)
 # ---------------------------------------------------------------------------
 
 def _grpc_frame(payload: bytes) -> bytes:
@@ -526,18 +528,18 @@ class _Conn:
 
         headers = dict(st["headers"])
         path = headers.get(":path", "")
-        if path == "/logs.v1.LogService/BatchWrite":
+        if path == METHOD_PATH:
             try:
                 msgs = _grpc_unframe(st["data"])
                 resp = self.handler.batch_write(msgs[0] if msgs else b"")
                 self._send_response(sid, _grpc_frame(resp), 0, "")
             except Exception as exc:  # INTERNAL
                 self._send_response(sid, b"", 13, str(exc))
-        elif path == "/" + REFLECTION_METHOD_PATH:
+        elif path == REFLECTION_METHOD_PATH:
             # reflection is a bidi stream; with the request fully
             # buffered (END_STREAM seen) it degenerates to one
             # response message per request message in a single DATA
-            # body — the same shape the gRPC-Web server uses
+            # body
             try:
                 body = b"".join(
                     _grpc_frame(handle_reflection(m))
@@ -729,14 +731,10 @@ def batch_write_http2(
     host: str, port: int, entries: list[dict], huffman: bool = False
 ) -> int:
     """BatchWrite over native HTTP/2; returns the accepted count."""
-    from clickhouse_observability_spark.api.grpc_transport import (
-        decode_batch_write_response,
-    )
-
     resp, status, msg = grpc_http2_call(
         host,
         port,
-        "/logs.v1.LogService/BatchWrite",
+        METHOD_PATH,
         encode_batch_write_request(entries),
         huffman=huffman,
     )

@@ -8,8 +8,8 @@ grpc GracefulStop (main.go:91-97).
 
 `EngineServer` is the Spark-native analog: the SparkSession stands in
 for the DB pool, `LogsTable.init_schema` is the DDL bootstrap, the
-Structured-Streaming `IngestStream` is the batcher, and the HTTP /
-gRPC-Web servers front the same two entry points. Graceful stop drains
+Structured-Streaming `IngestStream` is the batcher, and the HTTP and
+h2c gRPC servers front the same two entry points. Graceful stop drains
 the stream (final flush, ST5) before stopping the transports.
 
 Env config surface (names 1:1 with main.go; DATA_DIR replaces
@@ -27,11 +27,9 @@ import threading
 
 from pyspark.sql import SparkSession
 
-from clickhouse_observability_spark.api.grpc_transport import (
-    LogServiceHandler,
-    serve_grpc_web,
-)
+from clickhouse_observability_spark.api.grpc_transport import LogServiceHandler
 from clickhouse_observability_spark.api.http import LogsApi
+from clickhouse_observability_spark.api.http2_transport import serve_grpc_http2
 from clickhouse_observability_spark.sources.retention import apply_retention
 from clickhouse_observability_spark.sources.writer import LogsTable
 from clickhouse_observability_spark.streaming.batcher import IngestStream
@@ -88,7 +86,6 @@ class EngineServer:
         self.table = LogsTable(spark, os.path.join(self.data_dir, "logs"))
         self.stream: IngestStream | None = None
         self._http_server = None
-        self._grpc_server = None
         self._grpc_stop = None
         self._grpc_port = None
         self._threads: list[threading.Thread] = []
@@ -125,32 +122,14 @@ class EngineServer:
         self._api = api
         self._http_server = api.serve(*self.http_addr)
         # gRPC entry point: BatchWrite feeds the SAME batcher inbox
-        # (service.go:21-47 enqueues; accepted-count reply).
-        # GRPC_TRANSPORT selects the wire flavor: "h2c" = native
-        # application/grpc over hand-rolled HTTP/2 (main.go:74-88
-        # parity, api/http2_transport), default = gRPC-Web framing
-        # over HTTP/1.1 (browser/proxy-friendly, the r2-r4 surface).
-        handler = LogServiceHandler(self.stream.submit_many)
-        if os.environ.get("GRPC_TRANSPORT", "web") == "h2c":
-            from clickhouse_observability_spark.api.http2_transport import (
-                serve_grpc_http2,
-            )
-
-            self._grpc_stop, self._grpc_port = serve_grpc_http2(
-                handler, *self.grpc_addr
-            )
-            self._grpc_server = None
-        else:
-            self._grpc_server = serve_grpc_web(handler, *self.grpc_addr)
-            self._grpc_stop = self._grpc_server.shutdown
-            self._grpc_port = self._grpc_server.server_address[1]
-        servers = [self._http_server]
-        if self._grpc_server is not None:
-            servers.append(self._grpc_server)
-        for srv in servers:
-            t = threading.Thread(target=srv.serve_forever, daemon=True)
-            t.start()
-            self._threads.append(t)
+        # (service.go:21-47 enqueues; accepted-count reply), served as
+        # native application/grpc over h2c (main.go:74-88).
+        self._grpc_stop, self._grpc_port = serve_grpc_http2(
+            LogServiceHandler(self.stream.submit_many), *self.grpc_addr
+        )
+        t = threading.Thread(target=self._http_server.serve_forever, daemon=True)
+        t.start()
+        self._threads.append(t)
         return self
 
     @property

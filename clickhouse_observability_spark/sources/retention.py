@@ -1029,27 +1029,10 @@ def _apply_ttl_group_by(
     if dry_run:
         return {"dropped_months": [], "collapsed_months": to_collapse,
                 "rewritten": boundary, "dry_run": True}
-    # The per-month collapses are independent partition rewrites over
-    # disjoint directories (the docstring's scale contract), so they
-    # OVERLAP on a small driver pool instead of running serially —
-    # Spark schedules concurrent jobs fine (guide §2.6) and each job's
-    # tail backfills the next one's tasks. Pool width is bounded: the
-    # point is overlap, not fan-out (each job already parallelizes
-    # across the cluster internally).
     work = [(m, None) for m in to_collapse]
     if boundary is not None:
         work.append((boundary, cutoff))
-    if len(work) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(4, len(work))) as pool:
-            list(pool.map(
-                lambda mc: _collapse_partition(
-                    spark, path, mc[0], group_by, set_exprs, cutoff=mc[1]),
-                work,
-            ))
-    elif work:
-        m, cut = work[0]
+    for m, cut in work:
         _collapse_partition(spark, path, m, group_by, set_exprs, cutoff=cut)
     stale_views: list[str] = []
     if to_collapse or boundary is not None:

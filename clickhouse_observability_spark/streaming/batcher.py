@@ -60,6 +60,11 @@ DEFAULT_FLUSH_SIZE = 500  # main.go:28 INGEST_BATCH_SIZE
 # of TRIGGER_MAX_ROWS // flush_size (64 inbox files at the reference's
 # 500-row batch).
 TRIGGER_MAX_ROWS = 32_000
+# Tasks per micro-batch. The file source gives foreachBatch one
+# partition per inbox file, i.e. one small parquet file per inbox file
+# and month; the file cap above bounds a micro-batch, so a few tasks
+# suffice. coalesce adds no shuffle: it narrows the whole batch.
+WRITE_PARTITIONS = 4
 
 
 def _env_int(name: str, default: int) -> int:
@@ -93,7 +98,6 @@ class IngestStream:
         views: list | None = None,  # RollupView-likes, applied per batch
         maintain_indexes: bool = False,
         enforce_ttl_every_s: float | None = None,
-        write_partitions: int | None = None,
     ):
         """Knob defaults follow the reference's env-var config
         (cmd/server/main.go:25-29): INGEST_MAX_DELAY_MS -> trigger
@@ -124,30 +128,6 @@ class IngestStream:
             max_files_per_trigger
             if max_files_per_trigger is not None
             else max(1, TRIGGER_MAX_ROWS // self.flush_size)
-        )
-        # Micro-batch write width (r13, guide §6): the file source
-        # hands foreachBatch one partition PER INBOX FILE, so a
-        # 16-file trigger of 500-row files wrote ~16 tasks x months
-        # tiny parquet files per batch — task-launch + commit-rename
-        # overhead per trigger AND a small-files at-rest layout that
-        # every later scan pays for. A micro-batch is bounded by
-        # flush_size x max_files_per_trigger rows (TRIGGER_MAX_ROWS
-        # by default), so a few write tasks are plenty at any
-        # deployment size; the knob stays env-tunable
-        # (INGEST_WRITE_PARTITIONS, 0 = keep source partitioning) for
-        # streams configured with huge triggers.
-        # NOTE (r14, advisor): coalesce has no shuffle boundary, so
-        # it narrows the WHOLE micro-batch — normalization, view and
-        # index maintenance included, not just the write. That is
-        # deliberate (the work is bounded by the batch cap above and
-        # one task chain beats a repartition shuffle per trigger),
-        # but a wide-cluster stream with heavy per-batch work should
-        # set INGEST_WRITE_PARTITIONS higher or 0 — the default is a
-        # bounded-batch sizing, not a cluster sizing.
-        self.write_partitions = (
-            write_partitions
-            if write_partitions is not None
-            else _env_int("INGEST_WRITE_PARTITIONS", 4)
         )
         self.views = list(views or ())
         self.maintain_indexes = bool(maintain_indexes)
@@ -226,9 +206,7 @@ class IngestStream:
         marker = os.path.join(self.committed_dir, str(int(batch_id)))
         if os.path.exists(marker):
             return
-        if self.write_partitions and self.write_partitions > 0:
-            batch_df = batch_df.coalesce(self.write_partitions)
-        normalized = normalize_ingest(batch_df)
+        normalized = normalize_ingest(batch_df.coalesce(WRITE_PARTITIONS))
         self.table.insert(normalized)
         # Materialized views (CH `CREATE MATERIALIZED VIEW` analogue):
         # each writes this batch's partial states under an

@@ -10,7 +10,11 @@ import urllib.request
 
 import pytest
 
-from clickhouse_observability_spark.api.grpc_transport import grpc_web_call
+from clickhouse_observability_spark.api import http2_transport as H
+from clickhouse_observability_spark.api.grpc_reflection import (
+    REFLECTION_METHOD_PATH,
+    SERVICE_FULL,
+)
 from clickhouse_observability_spark.server import EngineServer
 
 
@@ -37,14 +41,19 @@ def test_full_lifecycle(engine):
     assert _get(http_port, "/ready")[0] == 200
     assert _get(http_port, "/api/ping")[1] == b"pong"
 
-    # gRPC write path feeds the streaming batcher
+    # native gRPC over h2c: reflection lists LogService, and the write
+    # path feeds the streaming batcher
+    resp, status, _ = H.grpc_http2_call(
+        "127.0.0.1", grpc_port, REFLECTION_METHOD_PATH, b"\x3a\x00"
+    )  # ServerReflectionRequest{list_services: ""}
+    assert status == 0 and SERVICE_FULL.encode() in resp
     entries = [
         {"ts": "2025-09-01T20:05:00Z", "service": "orders", "level": "WARN",
          "msg": f"m{i}", "attrs": {"user": "jane.smith"},
          "trace_id": f"t{i}", "span_id": f"s{i}"}
         for i in range(10)
     ]
-    assert grpc_web_call("127.0.0.1", grpc_port, entries) == 10
+    assert H.batch_write_http2("127.0.0.1", grpc_port, entries) == 10
 
     # micro-batches land within a few trigger intervals
     deadline = time.time() + 30
@@ -62,27 +71,30 @@ def test_full_lifecycle(engine):
 
 
 def test_server_sockets_disable_nagle(engine, monkeypatch):
-    """The LogsApi and gRPC-Web handlers set TCP_NODELAY on every
-    accepted socket: a reply is written as headers then body, and Nagle
-    would hold the body until the client's delayed ACK (~40 ms)."""
+    """The LogsApi and h2c servers set TCP_NODELAY on every accepted
+    socket: a reply is written as headers then body, and Nagle would
+    hold the body until the client's delayed ACK (~40 ms)."""
     import socket
 
     seen = {}
-    for name, srv in (("http", engine._http_server),
-                      ("grpc-web", engine._grpc_server)):
-        cls = srv.RequestHandlerClass
-        orig = cls.setup
+    cls = engine._http_server.RequestHandlerClass
+    setup, run = cls.setup, H._Conn.run
 
-        def setup(self, orig=orig, name=name):
-            orig(self)
-            seen[name] = self.connection.getsockopt(
-                socket.IPPROTO_TCP, socket.TCP_NODELAY)
+    def recording_setup(self):
+        setup(self)
+        seen["http"] = self.connection.getsockopt(
+            socket.IPPROTO_TCP, socket.TCP_NODELAY)
 
-        monkeypatch.setattr(cls, "setup", setup)
+    def recording_run(self):
+        seen["h2c"] = self.sock.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY)
+        run(self)
+
+    monkeypatch.setattr(cls, "setup", recording_setup)
+    monkeypatch.setattr(H._Conn, "run", recording_run)
     http_port, grpc_port = engine.ports
     assert _get(http_port, "/live")[0] == 200
-    assert grpc_web_call("127.0.0.1", grpc_port, []) == 0
-    assert seen == {"http": 1, "grpc-web": 1}
+    assert H.batch_write_http2("127.0.0.1", grpc_port, []) == 0
+    assert seen == {"http": 1, "h2c": 1}
 
 
 def test_graceful_stop_drains(spark, tmp_path):
@@ -95,22 +107,17 @@ def test_graceful_stop_drains(spark, tmp_path):
          "msg": f"m{i}", "attrs": {}, "trace_id": "", "span_id": ""}
         for i in range(7)
     ]
-    assert grpc_web_call("127.0.0.1", grpc_port, entries) == 7
+    assert H.batch_write_http2("127.0.0.1", grpc_port, entries) == 7
     srv.stop()  # ST5: final flush before exit (batcher.go:63-65)
     assert srv.table.read().count() == 7
 
 
-def test_server_native_h2c_transport(spark, tmp_path, monkeypatch):
-    """GRPC_TRANSPORT=h2c serves application/grpc over real HTTP/2:
-    the full lifecycle (bootstrap -> batcher -> h2c BatchWrite ->
-    drain -> rows queryable) with the hand-rolled transport."""
+def test_server_native_h2c_transport(spark, tmp_path):
+    """With no transport setting, EngineServer serves application/grpc
+    over real HTTP/2: bootstrap -> batcher -> h2c BatchWrite -> drain
+    -> the row is stored as sent."""
     from clickhouse_observability_spark.api import grpc_transport as G
-    from clickhouse_observability_spark.api.http2_transport import (
-        batch_write_http2,
-    )
-    from clickhouse_observability_spark.server import EngineServer
 
-    monkeypatch.setenv("GRPC_TRANSPORT", "h2c")
     srv = EngineServer(
         spark,
         data_dir=str(tmp_path / "data"),
@@ -120,7 +127,7 @@ def test_server_native_h2c_transport(spark, tmp_path, monkeypatch):
     try:
         _, grpc_port = srv.ports
         entries, _ = G.canonical_example()
-        assert batch_write_http2("127.0.0.1", grpc_port, entries) == 1
+        assert H.batch_write_http2("127.0.0.1", grpc_port, entries) == 1
     finally:
         srv.stop()
     rows = srv.table.read().collect()

@@ -174,20 +174,39 @@ def test_per_trigger_size_cap(spark, tmp_path):
         s.stop(drain=False)
 
 
-def test_default_file_cap_drains_backlog_in_one_trigger(stream):
+def test_default_file_cap_drains_backlog_in_one_trigger(spark, stream):
     # the default cap is TRIGGER_MAX_ROWS // flush_size files, so a
-    # 10-file backlog drains in ONE micro-batch
+    # 10-file backlog drains in ONE micro-batch, and that batch is
+    # written by WRITE_PARTITIONS tasks, not one task per inbox file
+    import glob
+    import os
+
     from clickhouse_observability_spark.streaming.batcher import (
         TRIGGER_MAX_ROWS,
+        WRITE_PARTITIONS,
     )
 
     assert stream.max_files_per_trigger == TRIGGER_MAX_ROWS // stream.flush_size
-    for i in range(10):
-        stream.submit_many([_wire(i * 10 + j) for j in range(2)])
-    q = stream.start()
-    q.processAllAvailable()
+    for i in range(10):  # each file holds one row of each month
+        stream.submit_many([_wire(i * 10, "2025-09-01T10:00:00Z"),
+                            _wire(i * 10 + 1, "2025-10-01T10:00:00Z")])
+    # one source partition per inbox file, as on a host with more cores
+    # than WRITE_PARTITIONS (on local[4] the source packs small files
+    # into 4 partitions anyway)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try:
+        q = stream.start()
+        q.processAllAvailable()
+    finally:
+        spark.conf.set(key, old)
     assert stream.table.read().count() == 20
     assert len(_data_batches(q, 20)) == 1
+    months = glob.glob(os.path.join(stream.table.path, "month=*"))
+    assert len(months) == 2
+    for month in months:
+        assert 1 <= len(glob.glob(os.path.join(month, "*.parquet"))) <= WRITE_PARTITIONS
 
 
 # ---------------------------------------------------------------------------
