@@ -298,31 +298,8 @@ def _media_decode_bench(spark) -> dict[str, float]:
         mb / (time.time() - t0), 3)
     df.unpersist()
 
-    # FLAC: 32 one-second-ish mono clips (Rice/fixed-predictor decode)
-    from clickhouse_observability_spark.operators.flac import encode_flac
-
-    rows = []
-    for i in range(32):
-        rate = 8000
-        n_frames = 8000
-        freq = 100.0 + 37.0 * i
-        samples = [
-            int(12000 * math.sin(2 * math.pi * freq * t / rate))
-            for t in range(n_frames)
-        ]
-        payload = encode_flac(samples, sample_rate=rate, channels=1)
-        rows.append((i, "audio", bytearray(payload), None, None, rate, 1000))
-    mb = sum(len(r[2]) for r in rows) / 1e6
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(32).cache()
-    df.count()
-    t0 = time.time()
-    extract_audio_features(df, fake_decode=False).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    out["media_decode_mb_per_sec_flac"] = round(mb / (time.time() - t0), 3)
-    df.unpersist()
-    # WAV control: same audio path, trivial decode — the gap between
-    # this and the flac number isolates codec cost from path overhead.
+    # WAV: the audio path with a trivial decode (PCM parse only), so
+    # the number is path overhead rather than codec cost.
     rows = [
         (i, "audio", bytearray(encode_wav(
             [int(12000 * math.sin(2 * math.pi * (100 + 37 * i) * t / 8000))

@@ -2,9 +2,8 @@
 surface (cmd/server/main.go:74-88 serves `application/grpc` over
 HTTP/2h2c on :8081).
 
-The container ships no grpcio and no HTTP/2 library, so — like the
-image/audio codecs — the PUBLIC wire formats are implemented from
-their RFCs with stdlib only:
+The container ships no grpcio and no HTTP/2 library, so the PUBLIC
+wire formats are implemented from their RFCs with stdlib only:
 
 - RFC 7541 HPACK: integer/string primitives, the full static table,
   a dynamic table with size eviction, and the complete Appendix B

@@ -752,8 +752,8 @@ def pigeonhole_chunk_key(hash_col: str, c: int, n_chunks: int) -> Column:
     """Chunk c of a 64-bit sketch split into n_chunks pigeonhole keys.
 
     THE single source of the chunk derivation: batch pairing
-    (hamming_pairs) and the streaming media-ingest at-rest index
-    (streaming/media_ingest.py) both call this — the index durably
+    (hamming_pairs) and the streaming vector-ingest at-rest index
+    (streaming/vector_ingest.py) both call this — the index durably
     stores these keys, so any change here must rebuild it."""
     base, extra = divmod(64, n_chunks)
     start = c * base + min(c, extra)

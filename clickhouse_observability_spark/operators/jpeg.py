@@ -8,7 +8,7 @@ stuffed bytes, stream-supplied tables. Entropy decoding is a Python
 bit-loop over per-component coefficient grids (payloads are
 Arrow-batched and small); dequantize + IDCT run vectorized over ALL
 blocks at once in numpy. Output is the Y (BT.601 luma) plane at full
-resolution — the same gray-rows contract as the PNM/BMP/PNG/GIF
+resolution — the same gray-rows contract as the PNM/BMP/PNG
 parsers — so chroma scans are entropy-decoded (the bitstream is
 sequential and refinement bits depend on coefficient state) but
 Cb/Cr IDCT work is skipped.
@@ -829,8 +829,7 @@ def _decode_progressive_scan(
 
 def _exif_orientation(seg: bytes) -> int:
     """Extract the Exif Orientation tag (0x0112) from an APP1 payload
-    — a tiny TIFF IFD walk (full TIFF decode lives in tiff.py; Exif
-    only needs IFD0's SHORT tags). Returns 1 (normal) when absent or
+    — a tiny TIFF IFD walk (Exif only needs IFD0's SHORT tags). Returns 1 (normal) when absent or
     malformed: orientation is advisory metadata, never a reason to
     fail the decode."""
     if seg[:6] != b"Exif\x00\x00":

@@ -6,13 +6,11 @@ layout, Arrow-batched mapInPandas transforms, batch shapes — is real
 and tested. Decoding is REAL for the public formats a stdlib parser
 can handle: PPM/PGM/BMP images (`decode_image`, since r3), full
 baseline PNG via stdlib zlib, baseline + progressive JPEG via numpy
-(`jpeg.py`), GIF87a/89a with full LZW (`gif.py`), TIFF 6.0
-(`tiff.py`), lossless WebP/VP8L (`webp.py`), RIFF/WAVE audio
-(integer PCM, IEEE float, G.711 A-law/mu-law — `decode_audio`), and
-YUV4MPEG2 video — all since r4. Remaining codecs (lossy WebP,
-MP3/AAC, compressed video) need libraries not in this container:
-those paths raise NotImplementedError unless `fake=True`,
-in which case a deterministic hash-seeded decode stands in so
+(`jpeg.py`), RIFF/WAVE audio (integer PCM, IEEE float, G.711
+A-law/mu-law — `decode_audio`), and YUV4MPEG2 video — all since r4.
+Other codecs (GIF, TIFF, WebP, FLAC, MP3/AAC, compressed video) have
+no in-repo decoder: unless `register_decoder` supplies one, those
+paths raise NotImplementedError unless `fake=True`, in which case a deterministic hash-seeded decode stands in so
 downstream feature extraction is testable end-to-end.
 
 Scale design: payload bytes travel through Arrow record batches
@@ -79,10 +77,9 @@ def make_fake_media(spark: SparkSession, n: int = 64, seed: int = 42) -> DataFra
 
 def make_real_image_media(spark: SparkSession, n: int = 24, seed: int = 7) -> DataFrame:
     """Media table whose payloads are REAL image bytes (PPM, BMP,
-    PNG, JPEG, GIF, TIFF and lossless WebP in rotation) —
-    deterministic RGB gradients of varying geometry, encoded with the
-    in-repo encoders, so the decode→resize path exercises actual
-    pixels (including DEFLATE, DCT, LZW, PackBits and VP8L
+    PNG and JPEG in rotation) — deterministic RGB gradients of varying
+    geometry, encoded with the in-repo encoders, so the decode→resize
+    path exercises actual pixels (including DEFLATE and DCT
     round-trips) end-to-end."""
     rows = []
     for i in range(n):
@@ -98,27 +95,15 @@ def make_real_image_media(spark: SparkSession, n: int = 24, seed: int = 7) -> Da
             ]
             for r in range(h)
         ]
-        if i % 7 == 3:
+        if i % 4 == 3:
             from .jpeg import encode_jpeg
 
             # near-lossless: the resize/feature tests compare pipeline
             # output against decode_image of the same payload, so lossy
             # is fine; q=100 keeps the pixels visually identical anyway
             payload = encode_jpeg(rgb, quality=100)
-        elif i % 7 == 4:
-            from .gif import encode_gif
-
-            payload = encode_gif(rgb, interlace=bool(i % 2))
-        elif i % 7 == 5:
-            from .tiff import encode_tiff
-
-            payload = encode_tiff(rgb, compression=(1, 5, 32773)[i % 3])
-        elif i % 7 == 6:
-            from .webp import encode_webp
-
-            payload = encode_webp(rgb, subtract_green=bool(i % 2))
         else:
-            payload = (encode_ppm, encode_bmp24, encode_png)[i % 7](rgb)
+            payload = (encode_ppm, encode_bmp24, encode_png)[i % 4](rgb)
         rows.append((i, "image", bytearray(payload), w, h, None, None))
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
@@ -637,9 +622,9 @@ def decode_image(payload: bytes, fake: bool = False,
     baseline: all color types, bit depths 1-16, all five filters,
     Adam7; DEFLATE via stdlib zlib), JPEG (baseline SOF0/SOF1 AND
     progressive SOF2, any chroma subsampling, restart intervals; see
-    `jpeg.py`), and GIF87a/89a (full LZW; see `gif.py`) — RGB
-    collapsed to BT.601 integer luma (for JPEG that IS the Y plane).
-    Remaining formats (WebP/TIFF/...) raise NotImplementedError
+    `jpeg.py`) — RGB collapsed to BT.601 integer luma (for JPEG that
+    IS the Y plane). Remaining formats (GIF/TIFF/WebP/...) raise
+    NotImplementedError
     unless fake=True, in which case a deterministic hash-seeded 8x8
     tile stands in so downstream plumbing stays testable with
     arbitrary bytes.
@@ -674,36 +659,12 @@ def decode_image(payload: bytes, fake: bool = False,
         except ValueError:
             if not fake:
                 raise  # arithmetic/lossless/12-bit modes land here too
-    if b[:6] in (b"GIF87a", b"GIF89a"):
-        from .gif import decode_gif_luma
-
-        try:
-            return decode_gif_luma(b)
-        except ValueError:
-            if not fake:
-                raise
-    if b[:4] in (b"II*\x00", b"MM\x00*"):
-        from .tiff import decode_tiff_luma
-
-        try:
-            return decode_tiff_luma(b)
-        except ValueError:
-            if not fake:
-                raise  # tiled/fax/JPEG-in-TIFF variants land here too
-    if b[:4] == b"RIFF" and b[8:12] == b"WEBP":
-        from .webp import decode_webp_luma
-
-        try:
-            return decode_webp_luma(b)
-        except ValueError:
-            if not fake:
-                raise  # lossy VP8 / extended VP8X land here too
     if not fake:
         raise NotImplementedError(
-            "remaining image formats (lossy WebP, AVIF/HEIC, ...) need "
-            "codec libraries not installed here; supported real formats "
-            "are PPM/PGM/BMP/PNG/GIF/TIFF, JPEG (baseline + progressive) "
-            "and lossless WebP — or pass fake=True for the deterministic "
+            "remaining image formats (GIF, TIFF, WebP, AVIF/HEIC, ...) "
+            "need codec libraries not installed here; supported real "
+            "formats are PPM/PGM/BMP/PNG and JPEG (baseline + "
+            "progressive) — or pass fake=True for the deterministic "
             "test decode"
         )
     h = hashlib.sha256(b).digest()
@@ -841,11 +802,9 @@ def decode_audio(payload: bytes, fake: bool = False,
 
     REAL for the public RIFF/WAVE family — integer PCM 8/16-bit, IEEE
     float 32/64-bit, and G.711 A-law/mu-law telephony companding (r4),
-    any channel count (downmixed) — and for FLAC (fixed + LPC
-    predictors, Rice partitions, every stereo decorrelation; see
-    `flac.py`), via pure-stdlib byte parsing. Perceptual codecs
-    (MP3/AAC/Opus/...) need a decoder library not present in this
-    container: they raise NotImplementedError unless fake=True, in
+    any channel count (downmixed), via pure-stdlib byte parsing.
+    Compressed codecs (FLAC/MP3/AAC/Opus/...) need a decoder library
+    not present in this container: they raise NotImplementedError unless fake=True, in
     which case a deterministic hash-seeded 256-sample clip stands in
     so downstream plumbing stays testable with arbitrary bytes — the
     exact contract decode_image has for unsupported image formats."""
@@ -857,14 +816,6 @@ def decode_audio(payload: bytes, fake: bool = False,
         try:
             rate, _n_ch, samples = _parse_wav(b)
             return rate, samples
-        except ValueError:
-            if not fake:
-                raise
-    if b[:4] == b"fLaC":
-        from .flac import decode_flac
-
-        try:
-            return decode_flac(b)
         except ValueError:
             if not fake:
                 raise
@@ -881,11 +832,10 @@ def decode_audio(payload: bytes, fake: bool = False,
 def make_real_audio_media(
     spark: SparkSession, n: int = 24, seed: int = 11
 ) -> DataFrame:
-    """Media table whose payloads are REAL audio bytes — WAV PCM and
-    FLAC in rotation (every 4th clip) — deterministic integer
-    sine-ish tones of varying length/rate/channels, so the
-    decode→features path runs on actual samples (including Rice/
-    fixed-predictor round-trips) end-to-end."""
+    """Media table whose payloads are REAL audio bytes — WAV PCM —
+    deterministic integer sine-ish tones of varying
+    length/rate/channels, so the decode→features path runs on actual
+    samples end-to-end."""
     import math
 
     rows = []
@@ -898,15 +848,7 @@ def make_real_audio_media(
         for t in range(n_frames):
             v = int(12000 * math.sin(2 * math.pi * freq * t / rate))
             samples.extend([v] * n_ch)  # identical channels: downmix-exact
-        if i % 4 == 3:
-            from .flac import encode_flac
-
-            payload = encode_flac(
-                samples, sample_rate=rate, channels=n_ch,
-                stereo_mode="mid_side" if n_ch == 2 else "independent",
-            )
-        else:
-            payload = encode_wav(samples, sample_rate=rate, n_channels=n_ch)
+        payload = encode_wav(samples, sample_rate=rate, n_channels=n_ch)
         rows.append(
             (i, "audio", bytearray(payload), None, None, rate,
              int(n_frames * 1000 / rate))
@@ -1068,11 +1010,9 @@ def decode_video(
     """Decode a video payload to (fps_num, fps_den, gray frames).
 
     REAL for the public formats a stdlib parser can handle —
-    YUV4MPEG2 4:2:0 (luma plane only, like the image decoders) and
-    animated GIF (full LZW; fps from the first Graphic Control
-    Extension's delay — see gif.decode_gif_video, r4). Compressed
-    codecs (H.264/VP9/AV1 in MP4/WebM/...) need decoder libraries not
-    in this container: they raise NotImplementedError unless
+    YUV4MPEG2 4:2:0 (luma plane only, like the image decoders).
+    Animated GIF and compressed codecs (H.264/VP9/AV1 in
+    MP4/WebM/...) need decoder libraries not in this container: they raise NotImplementedError unless
     fake=True, which yields a deterministic hash-seeded 4-frame 8x8
     clip at 25 fps — the same gating contract as
     decode_image/decode_audio."""
@@ -1086,18 +1026,10 @@ def decode_video(
         except ValueError:
             if not fake:
                 raise
-    if b[:6] in (b"GIF87a", b"GIF89a"):
-        from .gif import decode_gif_video
-
-        try:
-            return decode_gif_video(b)
-        except ValueError:
-            if not fake:
-                raise
     if not fake:
         raise NotImplementedError(
             "compressed video formats require a codec library not installed "
-            "here; supported real formats are YUV4MPEG2 and animated GIF — "
+            "here; the supported real format is YUV4MPEG2 — "
             "or pass fake=True for the deterministic test decode"
         )
     h = hashlib.sha256(b).digest()
@@ -1110,10 +1042,10 @@ def decode_video(
 def make_real_video_media(
     spark: SparkSession, n: int = 24, seed: int = 5
 ) -> DataFrame:
-    """Media table whose payloads are REAL video bytes — y4m with
-    animated GIF every 4th clip (since r4) — deterministic
-    moving-gradient clips of varying geometry/length/rate, so frame
-    extraction runs on actual decoded frames end-to-end."""
+    """Media table whose payloads are REAL video bytes — y4m —
+    deterministic moving-gradient clips of varying
+    geometry/length/rate, so frame extraction runs on actual decoded
+    frames end-to-end."""
     rows = []
     for i in range(n):
         w, h = 8 + 2 * (i % 3), 6 + 2 * (i % 2)
@@ -1126,16 +1058,7 @@ def make_real_video_media(
             ]
             for f in range(n_frames)
         ]
-        if i % 4 == 3:
-            from .gif import encode_gif_animation
-
-            # gray frames as (v, v, v): <=256 palette entries always
-            payload = encode_gif_animation(
-                [[[(v, v, v) for v in row] for row in fr] for fr in frames],
-                delay_cs=100 // fps,
-            )
-        else:
-            payload = encode_y4m(frames, fps_num=fps)
+        payload = encode_y4m(frames, fps_num=fps)
         rows.append(
             (i, "video", bytearray(payload), w, h, None,
              int(n_frames * 1000 / fps))
@@ -1215,11 +1138,11 @@ def extract_frames(
 
                         n = len(planes)
                 except ValueError:
-                    # not (valid) y4m: decode_video handles animated
-                    # GIF for real (r4) and raises the canonical
-                    # gating errors otherwise — ValueError for a
-                    # malformed y4m, NotImplementedError for a
-                    # compressed/unknown container
+                    # not (valid) y4m: decode_video applies a
+                    # registered decoder or raises the canonical
+                    # gating errors — ValueError for a malformed y4m,
+                    # NotImplementedError for a compressed/unknown
+                    # container
                     fps_num, fps_den, frames = decode_video(
                         b, fake=fake_decode, decoders=_dec
                     )
@@ -1717,8 +1640,8 @@ def frame_phashes(
 
                         n = len(planes)
                 except ValueError:
-                    # not (valid) y4m: decode_video handles animated
-                    # GIF for real (r4), gates the rest canonically
+                    # not (valid) y4m: decode_video applies a
+                    # registered decoder or gates canonically
                     fps_num, fps_den, frames = decode_video(
                         b, fake=fake_decode, decoders=_dec
                     )

@@ -267,7 +267,18 @@ def finalize(
     quantiles: dict[str, float] | None = None,
     topk_k: int = 5,
 ) -> DataFrame:
-    """Partial states -> human-readable answers (the SELECT step)."""
+    """Partial states -> human-readable answers (the SELECT step).
+
+    Explicitly requested quantiles need the histogram state: asking
+    for them over states built with `hist=False` raises instead of
+    returning a frame without the requested columns. The default
+    (`quantiles=None`) answers p50/p95/p99 when the histogram is there
+    and no quantiles when it is not."""
+    if quantiles and "value_hist" not in states.columns:
+        raise ValueError(
+            f"quantiles {sorted(quantiles)} requested but the states carry "
+            "no value_hist (built with hist=False)"
+        )
     qs = {"p50": 0.50, "p95": 0.95, "p99": 0.99} if quantiles is None else quantiles
     keep = [c for c in states.columns if c not in STATE_COLS]
     topk = (

@@ -231,7 +231,8 @@ def _classifier_artifacts(spark, sf_dir):
     # default embeddings key — a regenerated documents corpus must
     # invalidate the model sidecar
     path = IX.artifact_path(sf_dir, "quality_clf", source_table="documents")
-    if not IX.has_artifact(path):
+
+    def build():
         docs = table(spark, sf_dir, "documents")
         b0, w = TX.train_quality_classifier(
             docs, docs.filter(F.col("lang") == "en"), n_buckets=512
@@ -240,6 +241,8 @@ def _classifier_artifacts(spark, sf_dir):
             local_df(spark, [(b0, w)], "b0 double, w array<double>"), path
         )
         _CLF_META.pop(path, None)
+
+    IX.build_if_absent([path], build)
     if path not in _CLF_META:
         r = IX.load_artifact(spark, path).collect()[0]
         _CLF_META[path] = (float(r.b0), list(r.w))

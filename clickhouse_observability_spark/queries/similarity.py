@@ -18,12 +18,9 @@ def _label_centroids(spark, sf_dir):
     64 doubles) by everyone after — across processes, not just this
     one. No in-memory corpus-derived cache."""
     path = IX.artifact_path(sf_dir, "ivf_centroids")
-    if not IX.has_artifact(path):
-        IX.write_artifact(
-            S.ivf_centroids(table(spark, sf_dir, "embeddings")),
-            path,
-            coalesce=1,
-        )
+    IX.build_if_absent([path], lambda: IX.write_artifact(
+        S.ivf_centroids(table(spark, sf_dir, "embeddings")), path, coalesce=1
+    ))
     return IX.load_artifact(spark, path)
 
 
@@ -121,12 +118,15 @@ def _kmeans_artifacts(spark, sf_dir):
     last index still built inside the query call)."""
     assign_path = IX.artifact_path(sf_dir, "kmeans_assignments")
     cent_path = IX.artifact_path(sf_dir, "kmeans_centroids")
-    if not (IX.has_artifact(assign_path) and IX.has_artifact(cent_path)):
+
+    def build():
         assign, cent = S.kmeans_ivf_index(
             table(spark, sf_dir, "embeddings"), n_clusters=10
         )
         IX.write_artifact(assign, assign_path)
         IX.write_artifact(cent, cent_path, coalesce=1)
+
+    IX.build_if_absent([assign_path, cent_path], build)
     return IX.load_artifact(spark, assign_path), IX.load_artifact(spark, cent_path)
 
 
@@ -227,7 +227,8 @@ def _pq_artifacts(spark, sf_dir):
     """
     codes_path = IX.artifact_path(sf_dir, "pq_codes")
     cbs_path = IX.artifact_path(sf_dir, "pq_codebooks")
-    if not (IX.has_artifact(codes_path) and IX.has_artifact(cbs_path)):
+
+    def build():
         codes, cbs = S.pq_index(table(spark, sf_dir, "embeddings"))
         IX.write_artifact(codes, codes_path)
         IX.write_artifact(
@@ -244,6 +245,8 @@ def _pq_artifacts(spark, sf_dir):
         )
         codes.unpersist()  # at-rest copy supersedes the build cache
         _CODEBOOK_META.pop(cbs_path, None)
+
+    IX.build_if_absent([codes_path, cbs_path], build)
     if cbs_path not in _CODEBOOK_META:
         rows = IX.load_artifact(spark, cbs_path).collect()  # bounded: m·n_codes
         m = 1 + max(r.j for r in rows)
@@ -270,13 +273,16 @@ def _binary_artifacts(spark, sf_dir):
     processes, reads the sidecars."""
     means_path = IX.artifact_path(sf_dir, "bq_means")
     codes_path = IX.artifact_path(sf_dir, "bq_codes")
-    if not (IX.has_artifact(means_path) and IX.has_artifact(codes_path)):
+
+    def build():
         means, codes = S.binary_index(table(spark, sf_dir, "embeddings"))
         IX.write_artifact(
             local_df(spark, [(means,)], "mv array<double>"), means_path
         )
         IX.write_artifact(codes, codes_path)
         _BQ_MEANS_META.pop(means_path, None)
+
+    IX.build_if_absent([means_path, codes_path], build)
     if means_path not in _BQ_MEANS_META:
         _BQ_MEANS_META[means_path] = list(
             IX.load_artifact(spark, means_path).collect()[0].mv

@@ -23,6 +23,7 @@ DATABASE_URL since storage is a parquet path, not a DSN):
 from __future__ import annotations
 
 import os
+import sys
 import threading
 
 from pyspark.sql import SparkSession
@@ -154,8 +155,9 @@ class EngineServer:
                 self._api.query_log.flush(
                     self.spark, os.path.join(self.data_dir, "query_log")
                 )
-            except Exception:
-                pass  # best-effort: shutdown must not fail on telemetry
+            except Exception as exc:  # shutdown still completes
+                print(f"EngineServer.stop: query_log flush failed: {exc!r}",
+                      file=sys.stderr)
         for t in self._threads:
             t.join(timeout=5)  # the reference's 5 s drain budget
 

@@ -8,7 +8,7 @@ at-rest artifact instead of re-deriving it or, worse, holding a
 corpus-sized copy in driver memory. This module is that store:
 
     path = artifact_path(sf_dir, "pq_codes")   # keyed by corpus
-    if not has_artifact(path): write_artifact(df, path)
+    build_if_absent([path], lambda: write_artifact(df, path))
     codes = load_artifact(spark, path)          # distributed read
 
 Artifacts live under a warehouse root (env `SPARK_GRAFT_WAREHOUSE`,
@@ -33,6 +33,8 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
+import threading
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -71,6 +73,22 @@ def artifact_path(
 def has_artifact(path: str) -> bool:
     """A sidecar counts only when Spark's _SUCCESS marker landed."""
     return os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
+_BUILD_LOCK = threading.RLock()
+
+
+def build_if_absent(paths: Sequence[str], build: Callable[[], object]) -> bool:
+    """Run `build` (which writes every artifact in `paths`) unless all
+    of them are complete; True when it ran. The probe and the build
+    hold one module lock, so concurrent callers in a process (e.g.
+    sharded gate threads on a fresh warehouse) build once and never
+    read an artifact another thread is overwriting."""
+    with _BUILD_LOCK:
+        if all(has_artifact(p) for p in paths):
+            return False
+        build()
+        return True
 
 
 def write_artifact(df: DataFrame, path: str, coalesce: int | None = None) -> str:

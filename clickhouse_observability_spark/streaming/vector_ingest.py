@@ -1,7 +1,7 @@
 """EXT incremental EMBEDDING ingestion with online index maintenance.
 
-The third modality's streaming admission path (docs: corpus_ingest,
-media: media_ingest): vectors arrive continuously, and the ANN index
+The embedding counterpart of corpus_ingest's document admission
+path: vectors arrive continuously, and the ANN index
 artifacts the query layer depends on (IVF assignments, binary-
 quantization codes) must stay queryable WITHOUT a full rebuild per
 batch — at 100 TB a k-means refit per micro-batch is absurd, and an
@@ -85,8 +85,8 @@ class VectorIngest:
         self.n_clusters = n_clusters
         # optional SEMANTIC admission: reject vectors whose 64-bit BQ
         # code is within this hamming radius of anything already
-        # admitted (probe = pigeonhole chunk-index bucket join, like
-        # media_ingest's pHash path; None = id dedup only)
+        # admitted (probe = pigeonhole chunk-index bucket join over
+        # dedup.pigeonhole_chunk_key; None = id dedup only)
         self.neardup_hamming = neardup_hamming
         self.vectors_dir = os.path.join(store_dir, "vectors")
         self.reject_dir = os.path.join(store_dir, "rejected")
@@ -266,7 +266,7 @@ class VectorIngest:
         # -- SEMANTIC admission (optional): reject vectors whose BQ
         # code sits within `neardup_hamming` of anything already
         # admitted — in the at-rest chunk index (pigeonhole bucket
-        # probe, the media_ingest pHash shape; never a scan) or
+        # probe over dedup.pigeonhole_chunk_key; never a scan) or
         # within this batch (greedy in id order).
         #
         # Distance is over the FULL code (every word of bq): with

@@ -165,6 +165,50 @@ def test_simhash_pairs_bucketing(spark, docs):
     assert not any(p in pairs for p in [(0, 3), (3, 5)])
 
 
+@pytest.mark.parametrize("max_hamming", [2, 6])
+def test_hamming_pairs_matches_brute_force(spark, max_hamming):
+    """The pigeonhole bucket join returns exactly the brute-force pair
+    set (recall AND precision). 3 and 7 chunks split 64 bits unevenly;
+    signed sketches with bit 63 set exercise the unsigned shift."""
+    import random
+
+    rs = random.Random(max_hamming)
+    mask = (1 << 64) - 1
+
+    def signed(u):
+        return u - (1 << 64) if u >> 63 else u
+
+    sketches = [rs.getrandbits(64) | (1 << 63) for _ in range(8)]
+    sketches += [rs.getrandbits(64) for _ in range(8)]
+    planted = []
+    for base in sketches:
+        # neighbours at every distance 0..max_hamming+1 (the last one
+        # is just past the bar), flipped bits drawn across all chunks
+        for d in range(max_hamming + 2):
+            flip = 0
+            for bit in rs.sample(range(64), d):
+                flip |= 1 << bit
+            planted.append(base ^ flip)
+    values = [signed(v & mask) for v in sketches + planted]
+    hashes = spark.createDataFrame(
+        list(enumerate(values)), "id long, sketch long"
+    )
+    got = {
+        (r.a, r.b): r.hamming
+        for r in D.hamming_pairs(
+            hashes, "id", "sketch", max_hamming, out_a="a", out_b="b"
+        ).collect()
+    }
+    brute = {}
+    for a, va in enumerate(values):
+        for b in range(a + 1, len(values)):
+            d = bin((va ^ values[b]) & mask).count("1")
+            if d <= max_hamming:
+                brute[(a, b)] = d
+    assert any(d == max_hamming for d in brute.values())
+    assert got == brute
+
+
 def test_embedding_neardup_matches_numpy(spark, sf_small):
     import numpy as np
 

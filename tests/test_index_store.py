@@ -140,3 +140,47 @@ def test_kmeans_index_built_once_and_reused(
         for r in QS.sim_topk_ivf_kmeans(spark, sf_small).collect()
     )
     assert second == first
+
+
+def test_build_if_absent_builds_once_under_concurrent_callers(
+    spark, tmp_path
+):
+    """Concurrent callers on an empty dir (more threads than cores, a
+    short switch interval): one build, identical reads. Without the
+    lock every caller sees no _SUCCESS marker, and a later overwrite
+    races an earlier reader."""
+    import sys
+    import threading
+    import time
+
+    path = str(tmp_path / "art")
+    n = 6
+    builds = []
+    start = threading.Barrier(n)
+    rows = {}
+
+    def build():
+        builds.append(threading.get_ident())
+        time.sleep(0.5)  # widen the probe->marker window
+        IX.write_artifact(spark.range(100).selectExpr("id", "id * 3 AS v"), path)
+
+    def caller(i):
+        start.wait()
+        IX.build_if_absent([path], build)
+        rows[i] = sorted(tuple(r) for r in IX.load_artifact(spark, path).collect())
+
+    threads = [threading.Thread(target=caller, args=(i,)) for i in range(n)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(builds) == 1
+    assert len(rows) == n and len(rows[0]) == 100
+    assert all(r == rows[0] for r in rows.values())
+    assert IX.build_if_absent([path], build) is False and len(builds) == 1

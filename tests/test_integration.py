@@ -237,7 +237,9 @@ def test_adjudication_window_composition():
         "agg_ch_summap",
         "ch_dialect_wave10_panel",
         "schema_describe_events",
-        "multimodal_frame_plan",
+        # r15: the r14 rotation shortlist takes the slot of the
+        # removed media entry
+        "ch_dialect_wave11_panel",
         # r11 rotation: the MergeTree engine family, the 100 TB
         # scoring hot path's oracle, exact LTTB, MMR, the embedding
         # audit, and the window-sweep-rewritten interval/delta
@@ -391,9 +393,6 @@ def test_adjudication_window_composition():
         "lifecycle_partition_panel",
         "lifecycle_cross_table_panel",
         "lifecycle_skip_index_panel",
-        # r13 wave-11 dialect panel (registered after the window —
-        # the fresh r14 rotation backlog, CI-gated)
-        "ch_dialect_wave11_panel",
         # r13 second-wave rotation-outs: 3-round driver-green,
         # oracles retained under the CI registry gate
         "pipeline_retrieval_eval",

@@ -690,32 +690,6 @@ def test_frame_phashes_dedupe_and_match_decode(spark):
         assert hp == M.phash64(np.asarray(frames[idx], dtype=np.uint8))
 
 
-def test_multimodal_training_pipeline_invariants(spark):
-    from clickhouse_observability_spark.registry import queries
-
-    out = {r.media_id: r for r in
-           queries()["multimodal_training_pipeline"](
-               spark, "/root/testdata/sf0.001").collect()}
-    media = M.make_neardup_image_media(spark, n_groups=48)
-    pairs = M.image_neardup_pairs(media, max_hamming=6,
-                                  fake_decode=False).collect()
-    dropped = {p.media_b for p in pairs}
-    expected = {r.media_id for r in media.collect()} - dropped
-    assert set(out) == expected
-    assert expected, "keep-list must not be empty"
-    # each group contributes exactly its smallest surviving id when
-    # the group is fully connected (the planted re-encode case)
-    # and every tensor is the standalone resize of its payload
-    ref = {r.media_id: bytes(r.resized) for r in M.resize_images(
-        media.join(
-            spark.createDataFrame([(i,) for i in expected], "media_id long"),
-            "media_id", "left_semi"),
-        16, 16, fake_decode=False).collect()}
-    for mid, row in out.items():
-        assert bytes(row.resized) == ref[mid]
-        assert row.dst_width == 16 and row.dst_height == 16
-
-
 def test_wav_ima_adpcm_bit_exact():
     """IMA ADPCM (WAV format 0x11): the decoder must reproduce the
     encoder's internal reconstruction BIT-EXACTLY (the codec is a

@@ -293,28 +293,6 @@ def test_png_roundtrip_property(w, h, seed, interlace):
     assert M.decode_image(M.encode_png(rgb, interlace=1 if interlace else 0)) == ref
 
 
-@settings(max_examples=25, deadline=None)
-@given(
-    w=st.integers(1, 12),
-    h=st.integers(1, 12),
-    ncol=st.integers(1, 40),
-    seed=st.integers(0, 10_000),
-    interlace=st.booleans(),
-)
-def test_gif_roundtrip_property(w, h, ncol, seed, interlace):
-    """Lossless GIF LZW: exact pixel recovery for arbitrary palettes,
-    geometry and interlacing."""
-    import random
-
-    from clickhouse_observability_spark.operators import gif as G
-
-    rnd = random.Random(seed)
-    pal = [tuple(rnd.randrange(256) for _ in range(3)) for _ in range(ncol)]
-    rgb = [[pal[rnd.randrange(ncol)] for _ in range(w)] for _ in range(h)]
-    lum = [[G._luma(*px) for px in row] for row in rgb]
-    assert G.decode_gif_luma(G.encode_gif(rgb, interlace=interlace)) == lum
-
-
 @settings(max_examples=15, deadline=None)
 @given(
     w=st.integers(1, 24),

@@ -81,6 +81,21 @@ def test_uniq_estimate_tracks_exact(spark, sf_med):
         assert abs(est[k]["uniq_users_est"] - r["u"]) <= max(3, 0.05 * r["u"])
 
 
+def test_finalize_quantiles_need_hist_state(spark):
+    df = spark.createDataFrame(
+        [Row(ts="2024-01-01 00:00:00", event_type="t", user_id=i,
+             value=float(i)) for i in range(5)]
+    ).withColumn("ts", F.to_timestamp("ts"))
+    no_hist = R.build_rollup(df, "hour", ("event_type",), hist=False)
+    with pytest.raises(ValueError, match="value_hist"):
+        R.finalize(no_hist, quantiles={"p50": 0.5})
+    # the default asks for nothing the states cannot answer
+    fin = R.finalize(no_hist).collect()[0]
+    assert "p50" not in fin.asDict() and fin["cnt"] == 5
+    full = R.finalize(R.build_rollup(df, "hour", ("event_type",)))
+    assert {"p50", "p95", "p99"} <= set(full.columns)
+
+
 def test_zero_and_negative_values(spark):
     vals = [-250.0, -1.0, -0.5, 0.0, 0.0, 0.25, 1.0, 3.0, 1000.0]
     df = spark.createDataFrame(

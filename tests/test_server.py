@@ -158,6 +158,23 @@ def test_stop_flushes_query_log_to_data_dir(spark, tmp_path):
     assert any(r.route == "/v1/logs" and r.status == 200 for r in rows)
 
 
+def test_stop_reports_failed_query_log_flush(spark, tmp_path, capsys,
+                                            monkeypatch):
+    srv = EngineServer(
+        spark, data_dir=str(tmp_path / "data"), http_addr=":0",
+        grpc_addr=":0",
+    ).start()
+
+    def broken_flush(*a, **kw):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(srv._api.query_log, "flush", broken_flush)
+    srv.stop()  # returns despite the failed flush
+    assert not any(t.is_alive() for t in srv._threads)
+    err = capsys.readouterr().err
+    assert "query_log flush failed" in err and "disk full" in err
+
+
 def test_renice_threads_sets_every_thread():
     """renice_threads reaches each thread of the target process, not
     only its main thread (Linux keeps the nice value per thread)."""

@@ -294,88 +294,6 @@ def test_committed_marker_retention_prunes_old_ids(spark, tmp_path):
     assert table.read().count() == before
 
 
-# ----------------------------------------------------- media ingest
-
-def _smooth_rgb(seed, w=64, h=48):
-    import math
-    import random
-
-    rs = random.Random(seed)
-    blobs = [(rs.uniform(0, w), rs.uniform(0, h), rs.uniform(8, 20),
-              rs.randrange(60, 200)) for _ in range(5)]
-    img = []
-    for r in range(h):
-        row = []
-        for c in range(w):
-            v = 40.0
-            for bx, by, s, amp in blobs:
-                v += amp * math.exp(-(((c - bx) / s) ** 2 + ((r - by) / s) ** 2))
-            v = int(max(0, min(255, v)))
-            row.append((v, int(v * 0.8), int(v * 0.6)))
-        img.append(row)
-    return img
-
-
-def test_media_ingest_online_neardup_admission(spark, tmp_path):
-    """Full-history PERCEPTUAL admission: a re-encode of an image
-    admitted in an earlier batch (different format, different bytes)
-    must be rejected — beyond any watermark horizon — while new
-    pictures pass. Crash-retry of a batch admits nothing twice."""
-    from clickhouse_observability_spark.operators import multimodal as M
-    from clickhouse_observability_spark.operators.jpeg import encode_jpeg
-    from clickhouse_observability_spark.streaming.media_ingest import MediaIngest
-
-    mi = MediaIngest(
-        spark,
-        store_dir=str(tmp_path / "store"),
-        inbox_dir=str(tmp_path / "inbox"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        fake_decode=False,
-    )
-    mi.start()
-    try:
-        img_a, img_b, img_c = (_smooth_rgb(s) for s in (1, 2, 3))
-        # batch 1: A as PNG, a JPEG re-encode of A (within-batch
-        # near-dup), B as PPM, plus an audio clip
-        wav = M.encode_wav([100 * (i % 50) for i in range(800)], 8000)
-        mi.submit_many(
-            [
-                {"media_id": 1, "kind": "image", "payload": M.encode_png(img_a)},
-                {"media_id": 2, "kind": "image",
-                 "payload": encode_jpeg(img_a, quality=85)},
-                {"media_id": 3, "kind": "image", "payload": M.encode_ppm(img_b)},
-                {"media_id": 10, "kind": "audio", "payload": wav},
-            ]
-        )
-        assert mi.query is not None
-        mi.query.processAllAvailable()
-        got = {r.media_id for r in mi.read().collect()}
-        assert got == {1, 3, 10}  # JPEG twin of A dropped within-batch
-        # batch 2: ANOTHER re-encode of A (GIF-free: BMP), an exact
-        # audio resubmit, and a genuinely new picture C
-        mi.submit_many(
-            [
-                {"media_id": 4, "kind": "image", "payload": M.encode_bmp24(img_a)},
-                {"media_id": 5, "kind": "image", "payload": M.encode_png(img_c)},
-                {"media_id": 11, "kind": "audio", "payload": wav},
-            ]
-        )
-        mi.query.processAllAvailable()
-        got = {r.media_id for r in mi.read().collect()}
-        assert got == {1, 3, 10, 5}  # 4 near-dups history, 11 exact-dups it
-        # crash-retry: re-running an already-admitted batch is a no-op
-        batch = spark.createDataFrame(
-            [(5, "image",
-              __import__("base64").b64encode(M.encode_png(img_c)).decode())],
-            "media_id long, kind string, payload_b64 string",
-        )
-        mi._admit(batch, batch_id=999)
-        got = [r.media_id for r in mi.read().collect()]
-        assert sorted(got) == [1, 3, 5, 10]  # still exactly once
-    finally:
-        mi.stop()
-
-
 def test_corpus_versions_time_travel_and_diff(spark, tmp_path):
     from clickhouse_observability_spark.streaming.corpus_ingest import CorpusIngest
 
