@@ -666,10 +666,11 @@ class LogsApi:
         return 200, ""  # main.go:59
 
     # -- optional stdlib HTTP transport --------------------------------
-    def serve(self, host: str = "127.0.0.1", port: int = 8080):
+    def serve(self, host: str = "127.0.0.1", port: int = 8080, sock=None):
         """Start a blocking stdlib HTTP server exposing the reference
         routes. Returns the server (call .shutdown() from another
-        thread to stop)."""
+        thread to stop). `sock`, if given, is an already-bound socket
+        to listen on in place of binding (host, port)."""
         from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
         from urllib.parse import parse_qsl, urlparse
 
@@ -739,5 +740,11 @@ class LogsApi:
                 else:
                     self._send(404, {"error": "not found"})
 
-        server = ThreadingHTTPServer((host, port), Handler)
+        if sock is None:
+            return ThreadingHTTPServer((host, port), Handler)
+        server = ThreadingHTTPServer(
+            sock.getsockname(), Handler, bind_and_activate=False)
+        server.socket.close()
+        server.socket = sock
+        server.server_activate()  # listen
         return server

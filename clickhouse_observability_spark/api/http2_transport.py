@@ -568,12 +568,17 @@ class _Conn:
 
 
 def serve_grpc_http2(
-    handler: LogServiceHandler, host: str = "127.0.0.1", port: int = 0
+    handler: LogServiceHandler, host: str = "127.0.0.1", port: int = 0,
+    sock: socket.socket | None = None,
 ):
-    """Start the h2c gRPC server; returns (stop_fn, bound_port)."""
-    srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-    srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-    srv.bind((host, port))
+    """Start the h2c gRPC server; returns (stop_fn, bound_port).
+    `sock`, if given, is an already-bound socket to listen on in place
+    of binding (host, port)."""
+    srv = sock
+    if srv is None:
+        srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
+        srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
+        srv.bind((host, port))
     srv.listen(8)
     bound_port = srv.getsockname()[1]
     stopping = threading.Event()

@@ -23,6 +23,7 @@ DATABASE_URL since storage is a parquet path, not a DSN):
 from __future__ import annotations
 
 import os
+import socket
 import sys
 import threading
 
@@ -66,6 +67,32 @@ def _addr(raw: str, default_port: int) -> tuple[str, int]:
     return host or "127.0.0.1", int(port) if port else default_port
 
 
+def service_addrs(
+    http_addr: str | None = None, grpc_addr: str | None = None
+) -> tuple[tuple[str, int], tuple[str, int]]:
+    """(HTTP, gRPC) (host, port): explicit arguments, else HTTP_ADDR
+    and GRPC_ADDR, else the reference's :8080 and :8081."""
+    return (
+        _addr(http_addr or os.environ.get("HTTP_ADDR", ":8080"), 8080),
+        _addr(grpc_addr or os.environ.get("GRPC_ADDR", ":8081"), 8081),
+    )
+
+
+def reserve(addr: tuple[str, int]) -> socket.socket:
+    """Bind a TCP socket to `addr` without listening. The port is then
+    ours: the kernel never hands a bound port out as an ephemeral one,
+    so the Spark JVM and its Py4J gateway, started later, cannot take
+    it. Clients get ECONNREFUSED until the server listens on it."""
+    sock = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
+    sock.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
+    try:
+        sock.bind(addr)
+    except OSError:
+        sock.close()
+        raise
+    return sock
+
+
 class EngineServer:
     """One process wiring the whole engine, reference-shaped."""
 
@@ -75,15 +102,14 @@ class EngineServer:
         data_dir: str | None = None,
         http_addr: str | None = None,
         grpc_addr: str | None = None,
+        sockets: tuple[socket.socket, socket.socket] | None = None,
     ):
+        """`sockets`: (HTTP, gRPC) sockets already bound by `reserve`,
+        which start() listens on instead of binding the addresses."""
         self.spark = spark
         self.data_dir = data_dir or os.environ.get("DATA_DIR") or "./chobs-data"
-        self.http_addr = _addr(
-            http_addr or os.environ.get("HTTP_ADDR", ":8080"), 8080
-        )
-        self.grpc_addr = _addr(
-            grpc_addr or os.environ.get("GRPC_ADDR", ":8081"), 8081
-        )
+        self.http_addr, self.grpc_addr = service_addrs(http_addr, grpc_addr)
+        self._sockets = sockets or (None, None)
         self.table = LogsTable(spark, os.path.join(self.data_dir, "logs"))
         self.stream: IngestStream | None = None
         self._http_server = None
@@ -121,12 +147,14 @@ class EngineServer:
         api = LogsApi(self.table.read, logs_table=self.table,
                       rollup_view=view)
         self._api = api
-        self._http_server = api.serve(*self.http_addr)
+        http_sock, grpc_sock = self._sockets
+        self._http_server = api.serve(*self.http_addr, sock=http_sock)
         # gRPC entry point: BatchWrite feeds the SAME batcher inbox
         # (service.go:21-47 enqueues; accepted-count reply), served as
         # native application/grpc over h2c (main.go:74-88).
         self._grpc_stop, self._grpc_port = serve_grpc_http2(
-            LogServiceHandler(self.stream.submit_many), *self.grpc_addr
+            LogServiceHandler(self.stream.submit_many), *self.grpc_addr,
+            sock=grpc_sock,
         )
         t = threading.Thread(target=self._http_server.serve_forever, daemon=True)
         t.start()
@@ -175,8 +203,12 @@ class EngineServer:
 def main() -> None:  # pragma: no cover - manual entry point
     from clickhouse_observability_spark.session import get_spark
 
+    # take both service ports before the JVM starts: otherwise one of
+    # its ephemeral ports (Py4J, RPC, block manager) can land on a port
+    # a client was told to use, and the client's request reaches Spark
+    sockets = tuple(reserve(a) for a in service_addrs())
     spark = get_spark("chobs-server")
-    server = EngineServer(spark).start()
+    server = EngineServer(spark, sockets=sockets).start()
     # after start-up, so the boot itself runs at full priority
     jvm = getattr(spark.sparkContext._gateway, "proc", None)  # pyspark's Popen
     if jvm is not None:

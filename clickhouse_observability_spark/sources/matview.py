@@ -146,7 +146,9 @@ class MaterializedView:
             parquet_ts_micros,
         )
 
-        with parquet_ts_micros(self.spark):  # ts-typed dims keep stats
+        # ts-typed dims keep stats; batch's session, which is a
+        # streaming micro-batch's own clone on the ingest path
+        with parquet_ts_micros(batch.sparkSession):
             (self.partial(batch)
              .coalesce(1)
              .write.mode("append")

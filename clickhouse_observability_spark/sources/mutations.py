@@ -10,7 +10,7 @@ which month partitions contain matching rows (filter pushdown reaches
 the parquet scan; untouched months never read data pages), then ONLY
 those partitions rewrite — delete drops matching rows, update applies
 the assignment expressions to matching rows — preserving the
-(service, ts) within-partition sort and the zstd at-rest codec. At
+(service, ts) within-partition sort and the table's at-rest codec. At
 100 TB the cost is proportional to the mutated partitions, not the
 table, exactly CH's affected-parts cost model.
 
@@ -152,6 +152,7 @@ def apply_mutation(
         if os.path.exists(tmp_root):
             shutil.rmtree(tmp_root)
         from clickhouse_observability_spark.sources.writer import (
+            LOGS_PARQUET_OPTIONS,
             parquet_ts_micros,
         )
 
@@ -161,7 +162,7 @@ def apply_mutation(
                 .sortWithinPartitions(PARTITION_COLUMN, "service", "ts")
                 .write.mode("overwrite")
                 .partitionBy(PARTITION_COLUMN)
-                .option("compression", "zstd")
+                .options(**LOGS_PARQUET_OPTIONS)
                 .parquet(tmp_root)
             )
         from clickhouse_observability_spark.sources.tiering import (

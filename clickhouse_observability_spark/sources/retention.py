@@ -662,14 +662,14 @@ def apply_retention(
         )
         tmp = _debris_path(part_dir, ".tmp")
         from clickhouse_observability_spark.sources.writer import (
+            LOGS_PARQUET_OPTIONS,
             parquet_ts_micros,
         )
 
-        # zstd keeps the rewritten partition in the table's at-rest
-        # codec (LogsTable._write) instead of silently reverting to
-        # snappy; ts_micros keeps the ts footer stats alive.
+        # the table's at-rest codec, not Spark's default snappy;
+        # ts_micros keeps the ts footer stats alive.
         with parquet_ts_micros(spark):
-            kept.write.mode("overwrite").option("compression", "zstd") \
+            kept.write.mode("overwrite").options(**LOGS_PARQUET_OPTIONS) \
                 .parquet(tmp)
         _swap_partition(part_dir, tmp)
         rewritten = cutoff_month
@@ -718,6 +718,7 @@ def _apply_column_ttls(
     if not col_ttls:
         return out
     from clickhouse_observability_spark.sources.writer import (
+        LOGS_PARQUET_OPTIONS,
         parquet_ts_micros,
     )
 
@@ -777,7 +778,7 @@ def _apply_column_ttls(
         tmp = _debris_path(part_dir, ".tmp")
         with parquet_ts_micros(spark):
             (df.sortWithinPartitions("service", "ts")
-             .write.mode("overwrite").option("compression", "zstd")
+             .write.mode("overwrite").options(**LOGS_PARQUET_OPTIONS)
              .parquet(tmp))
         _swap_partition(part_dir, tmp)
         for c in stale_cols:
@@ -815,6 +816,7 @@ def _apply_delete_where(
         return []
     from clickhouse_observability_spark.sources.tiering import month_dirs
     from clickhouse_observability_spark.sources.writer import (
+        LOGS_PARQUET_OPTIONS,
         parquet_ts_micros,
     )
 
@@ -875,7 +877,7 @@ def _apply_delete_where(
         tmp = _debris_path(part_dir, ".tmp")
         with parquet_ts_micros(spark):
             (kept.sortWithinPartitions("service", "ts")
-             .write.mode("overwrite").option("compression", "zstd")
+             .write.mode("overwrite").options(**LOGS_PARQUET_OPTIONS)
              .parquet(tmp))
         import pyarrow.parquet as _pq
 
@@ -957,6 +959,7 @@ def _collapse_partition(
     union back in. The rewrite preserves the (service, ts) sort, the
     zstd codec and the TIMESTAMP_MICROS footer stats."""
     from clickhouse_observability_spark.sources.writer import (
+        LOGS_PARQUET_OPTIONS,
         parquet_ts_micros,
     )
 
@@ -1000,7 +1003,7 @@ def _collapse_partition(
     with parquet_ts_micros(spark):
         (out.repartition(1)
             .sortWithinPartitions("service", "ts")
-            .write.mode("overwrite").option("compression", "zstd")
+            .write.mode("overwrite").options(**LOGS_PARQUET_OPTIONS)
             .parquet(tmp))
     _swap_partition(part_dir, tmp)
     return {"month": month}
@@ -1072,6 +1075,7 @@ def compact_partition(
     optimization (Delta's OPTIMIZE ZORDER runs at the same point in
     the lifecycle)."""
     from clickhouse_observability_spark.sources.writer import (
+        LOGS_PARQUET_OPTIONS,
         parquet_ts_micros,
     )
 
@@ -1117,7 +1121,7 @@ def compact_partition(
                 .sortWithinPartitions("__z")
                 .drop("__z")
                 .write.mode("overwrite")
-                .option("compression", "zstd")
+                .options(**LOGS_PARQUET_OPTIONS)
                 .parquet(tmp)
             )
     else:
@@ -1126,7 +1130,7 @@ def compact_partition(
                 df.repartition(target_files)
                 .sortWithinPartitions("service", "ts")
                 .write.mode("overwrite")
-                .option("compression", "zstd")  # match LogsTable._write
+                .options(**LOGS_PARQUET_OPTIONS)
                 .parquet(tmp)
             )
     _swap_partition(part_dir, tmp)

@@ -44,6 +44,23 @@ from clickhouse_observability_spark.schema import (
 )
 
 
+# At-rest codec of the logs table. Every write path of the table
+# (ingest, OPTIMIZE, TTL rewrites, mutations, z-order) passes these
+# options, so a rewrite keeps the level ingest wrote at; only an armed
+# RECOMPRESS TTL picks another codec. zstd beats snappy by ~30% at
+# comparable scan speed, and at 100 TB the scan is IO-bound. Level 9
+# is the knee: one 8k-row part of benchmark-shaped logs (4 vCPUs)
+# takes 28.5 B/row at Spark's default level 3, 25.5 at 6 and 24.3 at
+# 9 in the same write time, and 23.8 at 12 in 2.3x the write time.
+# (The reference's ClickHouse uses LZ4 on the wire; the codec is an
+# at-rest concern.)
+LOGS_ZSTD_LEVEL = 9
+LOGS_PARQUET_OPTIONS = {
+    "compression": "zstd",
+    "parquet.compression.codec.zstd.level": str(LOGS_ZSTD_LEVEL),
+}
+
+
 # Unresolved-Column cache for the hot per-micro-batch projections
 # (r14, guide §4-adjacent driver-side cost): building the normalize
 # projection is ~15 py4j round-trips (~60-80ms measured inside each
@@ -89,10 +106,10 @@ def normalize_ingest(df: DataFrame) -> DataFrame:
     return df.select(*cols)
 
 
-# reentrant-counter state for parquet_ts_micros (see its docstring)
+# reentrant-counter state for parquet_ts_micros (see its docstring):
+# id(session) -> [open scopes, the value the first scope replaced]
 _TS_MICROS_LOCK = threading.Lock()
-_TS_MICROS_DEPTH = 0
-_TS_MICROS_PREV: str | None = None
+_TS_MICROS_SCOPES: dict[int, list] = {}
 
 
 @contextmanager
@@ -110,34 +127,38 @@ def parquet_ts_micros(spark: SparkSession):
     changes the written physical type for every UNRELATED parquet
     write in the session (advice r7). Every ts-bearing write path in
     this package (insert, mutation/retention/z-order rewrites) wraps
-    itself in this.
+    itself in this. Pass the session the write RUNS in: a streaming
+    micro-batch runs in a clone of the session that started the
+    stream, with its own conf.
 
-    Session conf is shared process state, so overlapping scopes from
-    concurrent threads are serialized under a reentrant counter: the
-    FIRST scope in saves the prior value and sets MICROS, the LAST
-    scope out restores it — two interleaved scopes can no longer
-    restore a stale value mid-write. (A parquet write outside any
-    scope that races a scoped write still sees MICROS for its
-    duration — unavoidable with session-scoped conf; that write is
-    outside this package's write paths by construction.)"""
+    Session conf is shared process state, so overlapping scopes on one
+    session from concurrent threads are serialized under a reentrant
+    counter per session: the FIRST scope in saves the prior value and
+    sets MICROS, the LAST scope out restores it — two interleaved
+    scopes can no longer restore a stale value mid-write. (A parquet
+    write outside any scope that races a scoped write still sees
+    MICROS for its duration — unavoidable with session-scoped conf;
+    that write is outside this package's write paths by
+    construction.)"""
     key = "spark.sql.parquet.outputTimestampType"
     with _TS_MICROS_LOCK:
-        global _TS_MICROS_DEPTH, _TS_MICROS_PREV
-        if _TS_MICROS_DEPTH == 0:
-            _TS_MICROS_PREV = spark.conf.get(key, None)
+        scope = _TS_MICROS_SCOPES.get(id(spark))
+        if scope is None:
+            scope = [0, spark.conf.get(key, None)]
+            _TS_MICROS_SCOPES[id(spark)] = scope
             spark.conf.set(key, "TIMESTAMP_MICROS")
-        _TS_MICROS_DEPTH += 1
+        scope[0] += 1
     try:
         yield
     finally:
         with _TS_MICROS_LOCK:
-            _TS_MICROS_DEPTH -= 1
-            if _TS_MICROS_DEPTH == 0:
-                if _TS_MICROS_PREV is None:
+            scope[0] -= 1
+            if scope[0] == 0:
+                del _TS_MICROS_SCOPES[id(spark)]
+                if scope[1] is None:
                     spark.conf.unset(key)
                 else:
-                    spark.conf.set(key, _TS_MICROS_PREV)
-                _TS_MICROS_PREV = None
+                    spark.conf.set(key, scope[1])
 
 
 class LogsTable:
@@ -189,11 +210,12 @@ class LogsTable:
         is not atomic with the insert — `MaterializedView.refresh()`
         repairs a crash between the two.
 
-        ``materialized=True``: the caller already eagerly
-        checkpointed `df` (e.g. INSERT ... SELECT, which must
-        materialize before a self-referential append) — skip the
-        trigger-path checkpoint so the rows aren't copied twice, and
-        leave unpersisting to the owner."""
+        ``materialized=True``: the caller already materialized `df`
+        — checkpointed (INSERT ... SELECT, which must materialize
+        before a self-referential append) or persisted (the ingest
+        stream's micro-batch) — so skip the trigger-path checkpoint
+        that would copy the rows twice, and leave unpersisting to the
+        owner."""
         block = df.select(
             *LOGS_COLUMNS, *self.schema_ext.write_columns(df)
         )
@@ -241,7 +263,7 @@ class LogsTable:
         raise ValueError(f"no materialized view {name!r}")
 
     def _write(self, df: DataFrame, mode: str) -> None:
-        with parquet_ts_micros(self.spark):
+        with parquet_ts_micros(df.sparkSession):
             self._write_unscoped(df, mode)
 
     def _write_unscoped(self, df: DataFrame, mode: str) -> None:
@@ -257,11 +279,7 @@ class LogsTable:
             .sortWithinPartitions(PARTITION_COLUMN, "service", "ts")
             .write.mode(mode)
             .partitionBy(PARTITION_COLUMN)
-            # zstd: ~30% smaller than snappy at comparable scan speed —
-            # at 100 TB the scan is IO-bound, so smaller wins (the
-            # reference's ClickHouse uses LZ4 on the wire; codec choice
-            # is an at-rest concern here).
-            .option("compression", "zstd")
+            .options(**LOGS_PARQUET_OPTIONS)
             .parquet(self.path)
         )
 

@@ -116,6 +116,7 @@ def write_zordered(
     ROW GROUPS inside each file tile it too — parquet keeps min/max
     stats at both granularities)."""
     from clickhouse_observability_spark.sources.writer import (
+        LOGS_PARQUET_OPTIONS,
         parquet_ts_micros,
     )
 
@@ -127,6 +128,6 @@ def write_zordered(
             .sortWithinPartitions("__z")
             .drop("__z")
             .write.mode(mode)
-            .option("compression", "zstd")
+            .options(**LOGS_PARQUET_OPTIONS)
             .parquet(path)
         )

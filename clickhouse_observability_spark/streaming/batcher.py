@@ -25,7 +25,15 @@ takes a whole file, so small-call traffic is capped by call count (64
 calls per trigger at the default sizes). The reference's 4x-batch
 channel (ST2) sizes the producer-side buffer, not a flush, so it does
 not size a trigger either; here the buffer is the inbox on disk, not a
-user-space queue that blocks producers. foreachBatch writes are
+user-space queue that blocks producers.
+
+One micro-batch is one INSERT block, as in the reference's MergeTree
+(db.go:39-57): foreachBatch normalizes it as a single partition and
+persists it, the insert writes ONE sorted part per month from it, and
+every attached view builds its increment from the same rows, so the
+inbox is read once per micro-batch and the views plan no shuffle.
+
+foreachBatch writes are
 synchronous and checkpointed, and appends are BATCH-ID IDEMPOTENT:
 each committed micro-batch writes a batch-id marker to a
 committed-batches sidecar next to the checkpoint, and a retried
@@ -58,13 +66,9 @@ DEFAULT_FLUSH_EVERY_MS = 100  # main.go:29 INGEST_MAX_DELAY_MS
 DEFAULT_FLUSH_SIZE = 500  # main.go:28 INGEST_BATCH_SIZE
 # Upper bound on the rows of one micro-batch, turned into a file cap
 # of TRIGGER_MAX_ROWS // flush_size (64 inbox files at the reference's
-# 500-row batch).
+# 500-row batch). A batch this small is one task's work, so
+# _write_batch runs it as a single partition.
 TRIGGER_MAX_ROWS = 32_000
-# Tasks per micro-batch. The file source gives foreachBatch one
-# partition per inbox file, i.e. one small parquet file per inbox file
-# and month; the file cap above bounds a micro-batch, so a few tasks
-# suffice. coalesce adds no shuffle: it narrows the whole batch.
-WRITE_PARTITIONS = 4
 
 
 def _env_int(name: str, default: int) -> int:
@@ -206,14 +210,22 @@ class IngestStream:
         marker = os.path.join(self.committed_dir, str(int(batch_id)))
         if os.path.exists(marker):
             return
-        normalized = normalize_ingest(batch_df.coalesce(WRITE_PARTITIONS))
-        self.table.insert(normalized)
-        # Materialized views (CH `CREATE MATERIALIZED VIEW` analogue):
-        # each writes this batch's partial states under an
-        # inc=b<batch_id> dir with OVERWRITE — idempotent on retry
-        # even inside the crash window below, unlike the raw append.
-        for view in self.views:
-            view.apply(normalized, batch_id)
+        # One INSERT block (module docstring): persisted, so the insert
+        # and every view read the inbox once (Spark's foreachBatch
+        # pattern for several sinks); one partition, so the insert
+        # writes one part per month and the views shuffle nothing.
+        normalized = normalize_ingest(batch_df.coalesce(1)).persist()
+        try:
+            self.table.insert(normalized, materialized=True)
+            # Materialized views (CH `CREATE MATERIALIZED VIEW`
+            # analogue): each writes this batch's partial states under
+            # an inc=b<batch_id> dir with OVERWRITE — idempotent on
+            # retry even inside the crash window below, unlike the raw
+            # append.
+            for view in self.views:
+                view.apply(normalized, batch_id)
+        finally:
+            normalized.unpersist()
         if self.maintain_indexes:
             # online skip-index maintenance (CH: NEW parts get their
             # index at write time, even before any MATERIALIZE —

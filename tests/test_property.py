@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -64,7 +63,6 @@ def _model(rows, service, frm, to, level, user, limit):
     return out[:limit]
 
 
-@pytest.mark.slow
 @settings(
     max_examples=20,
     deadline=None,

@@ -96,6 +96,25 @@ def test_view_tracks_ingest(spark, stream):
     assert got_day == want_day
 
 
+def test_inbox_read_once_per_micro_batch(spark, stream):
+    # Spark counts a source's rows once per action that reads it, so
+    # the insert and the view sharing one materialized batch report
+    # each row once; a second read of the inbox would double the sum
+    s, table, view = stream
+    n = 70
+    s.max_files_per_trigger = 1  # one 70-row inbox file per micro-batch
+    s.submit_many(_rows(n))
+    s.submit_many(_rows(n, start=n))
+    s.start()
+    s.query.processAllAvailable()
+    batches = [p for p in s.query.recentProgress if p.numInputRows > 0]
+    s.stop(drain=False)
+    assert len(batches) == 2
+    assert sum(p.numInputRows for p in batches) == 2 * n
+    assert table.read().count() == 2 * n
+    assert sum(r["cnt"] for r in view.query(spark).collect()) == 2 * n
+
+
 def test_retry_never_double_counts_view(spark, stream):
     s, table, view = stream
     s.submit_many(_rows(150))

@@ -204,3 +204,55 @@ def test_renice_threads_sets_every_thread():
         child.kill()
         child.wait()
     renice_threads(child.pid, 5)  # a process that is gone is a no-op
+
+
+def test_main_binds_service_ports_before_spark(spark, tmp_path, monkeypatch):
+    """main() binds HTTP_ADDR and GRPC_ADDR before the Spark JVM
+    starts, so none of the JVM's ports can take them; the server then
+    listens on exactly those ports."""
+    import socket
+
+    from clickhouse_observability_spark import server as S
+    from clickhouse_observability_spark import session
+
+    probes = [socket.socket() for _ in range(2)]
+    for p in probes:
+        p.bind(("127.0.0.1", 0))
+    ports = [p.getsockname()[1] for p in probes]
+    for p in probes:
+        p.close()
+    monkeypatch.setenv("HTTP_ADDR", f"127.0.0.1:{ports[0]}")
+    monkeypatch.setenv("GRPC_ADDR", f"127.0.0.1:{ports[1]}")
+    monkeypatch.setenv("DATA_DIR", str(tmp_path))
+    monkeypatch.delenv("RETENTION_DAYS", raising=False)
+
+    def get_spark(*a, **kw):
+        for port in ports:
+            # reserved: another bind fails, and nothing listens yet
+            other = socket.socket()
+            with pytest.raises(OSError):
+                other.bind(("127.0.0.1", port))
+            other.close()
+            with pytest.raises(ConnectionRefusedError):
+                socket.create_connection(("127.0.0.1", port), timeout=5)
+        return spark
+
+    served = {}
+
+    def run_until_signal(srv):
+        try:
+            served["ports"] = srv.ports
+            served["ready"] = _get(ports[0], "/ready")[0]
+            served["written"] = H.batch_write_http2(
+                "127.0.0.1", ports[1],
+                [{"ts": "2025-09-01T20:05:00Z", "service": "orders",
+                  "level": "INFO", "msg": "m", "attrs": {},
+                  "trace_id": "t", "span_id": "s"}])
+        finally:
+            srv.stop()
+
+    monkeypatch.setattr(session, "get_spark", get_spark)
+    monkeypatch.setattr(S, "renice_threads", lambda *a: None)
+    monkeypatch.setattr(S.EngineServer, "run_until_signal", run_until_signal)
+    S.main()
+    assert served == {"ports": tuple(ports), "ready": 200, "written": 1}

@@ -176,23 +176,21 @@ def test_per_trigger_size_cap(spark, tmp_path):
 
 def test_default_file_cap_drains_backlog_in_one_trigger(spark, stream):
     # the default cap is TRIGGER_MAX_ROWS // flush_size files, so a
-    # 10-file backlog drains in ONE micro-batch, and that batch is
-    # written by WRITE_PARTITIONS tasks, not one task per inbox file
+    # 10-file backlog drains in ONE micro-batch, and that batch is one
+    # INSERT block: one part per month, not one per inbox file or task
     import glob
     import os
 
     from clickhouse_observability_spark.streaming.batcher import (
         TRIGGER_MAX_ROWS,
-        WRITE_PARTITIONS,
     )
 
     assert stream.max_files_per_trigger == TRIGGER_MAX_ROWS // stream.flush_size
     for i in range(10):  # each file holds one row of each month
         stream.submit_many([_wire(i * 10, "2025-09-01T10:00:00Z"),
                             _wire(i * 10 + 1, "2025-10-01T10:00:00Z")])
-    # one source partition per inbox file, as on a host with more cores
-    # than WRITE_PARTITIONS (on local[4] the source packs small files
-    # into 4 partitions anyway)
+    # one source partition per inbox file, as on a host with many
+    # cores (on local[4] the source packs small files into 4 partitions)
     key = "spark.sql.files.maxPartitionBytes"
     old = spark.conf.get(key)
     spark.conf.set(key, "1024")
@@ -206,7 +204,20 @@ def test_default_file_cap_drains_backlog_in_one_trigger(spark, stream):
     months = glob.glob(os.path.join(stream.table.path, "month=*"))
     assert len(months) == 2
     for month in months:
-        assert 1 <= len(glob.glob(os.path.join(month, "*.parquet"))) <= WRITE_PARTITIONS
+        assert len(glob.glob(os.path.join(month, "*.parquet"))) == 1
+
+
+def test_streamed_parts_keep_ts_stats(spark, stream):
+    # a micro-batch runs in the stream's clone of the session, so the
+    # insert must scope TIMESTAMP_MICROS on that session: INT96 parts
+    # carry no ts footer stats (system.parts min_ts/max_ts, pruning)
+    stream.submit_many([_wire(i) for i in range(5)])
+    q = stream.start()
+    q.processAllAvailable()
+    parts = stream.table.parts()
+    assert parts
+    assert all(p["min_ts"] == p["max_ts"] == "2025-09-01 10:00:00+00:00"
+               for p in parts)
 
 
 # ---------------------------------------------------------------------------

@@ -148,6 +148,41 @@ def test_compaction_merges_files(spark, table):
     assert table.read().filter(F.col("msg") == "ok").count() == 3
 
 
+def test_optimize_keeps_ingest_codec(spark, table, tmp_path):
+    # OPTIMIZE rewrites a month at the codec ingest wrote it with, so a
+    # merge of an already-merged month does not re-inflate it
+    import glob
+
+    from clickhouse_observability_spark.functions.ch_dialect import ch_sql
+    from clickhouse_observability_spark.streaming.batcher import (
+        IngestStream,
+    )
+
+    stream = IngestStream(spark, table, str(tmp_path / "inbox"),
+                          str(tmp_path / "ckpt"))
+    stream.submit_many(
+        {"ts": f"2025-09-{1 + i % 28:02d}T{i % 24:02d}:{i % 60:02d}:00Z",
+         "service": f"svc-{i % 5}", "level": ("INFO", "WARN")[i % 2],
+         "msg": f"GET /api/v1/items/{i * 7919 % 100000} 200 in {i % 900}ms",
+         "attrs": {"user": f"u{i % 97}"}, "trace_id": f"t{i:05d}",
+         "span_id": f"{i * 2654435761 % 2**32:08x}"}
+        for i in range(3000)
+    )
+    stream.start()
+    stream.query.processAllAvailable()
+    stream.stop(drain=False)
+
+    def month_bytes():
+        return sum(os.path.getsize(f) for f in glob.glob(
+            os.path.join(table.path, "month=202509", "*.parquet")))
+
+    streamed = month_bytes()
+    assert ch_sql(spark, "OPTIMIZE TABLE logs PARTITION 202509",
+                  logs=table) == 1
+    assert table.read().count() == 3000
+    assert month_bytes() <= 1.02 * streamed
+
+
 def test_sorted_within_partitions(spark, table):
     # DDL ORDER BY (service, ts): rows inside each file are sorted so
     # parquet row-group stats can skip granules (db.go:52-53 analog).
