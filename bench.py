@@ -184,141 +184,6 @@ R4_MIN_COMMON = {
 }
 
 
-def _media_decode_bench(spark) -> dict[str, float]:
-    """Decode throughput (MB/s of encoded payload) through the real
-    Arrow-batched mapInPandas path, per format — the number SCALING.md
-    cites for the pure-Python-codec constraint. Payloads are
-    deterministic synthetic media encoded with the in-repo encoders;
-    decode is the real bit-exact path (fake_decode=False)."""
-    import math
-
-    from clickhouse_observability_spark.operators.jpeg import encode_jpeg
-    from clickhouse_observability_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        encode_png,
-        encode_wav,
-        extract_audio_features,
-        extract_features,
-    )
-
-    def gradient(w: int, h: int, i: int):
-        return [
-            [((r * 37 + c * 11 + i * 13) % 256,
-              (r * 5 + c * 29 + i * 7) % 256,
-              (r * 17 + c * 3 + i * 23) % 256) for c in range(w)]
-            for r in range(h)
-        ]
-
-    out: dict[str, float] = {}
-    # 32 images per format, 64x48 px: one per core, so wall-clock is
-    # one payload's decode time and MB/s reflects per-core throughput
-    # times the parallelism the plan actually achieves.
-    for fmt, enc in (("jpeg", lambda rgb: encode_jpeg(rgb, quality=85)),
-                     ("png", encode_png)):
-        rows = [
-            (i, "image", bytearray(enc(gradient(64, 48, i))), 64, 48, None, None)
-            for i in range(32)
-        ]
-        mb = sum(len(r[2]) for r in rows) / 1e6
-        df = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(32).cache()
-        df.count()  # materialize: time decode, not generation
-        t0 = time.time()
-        extract_features(df, fake_decode=False).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        out[f"media_decode_mb_per_sec_{fmt}"] = round(mb / (time.time() - t0), 3)
-        df.unpersist()
-
-    # r8: realistic-size JPEG (256x256) — the 64x48 metric above is
-    # dominated by per-task dispatch overhead at ~4.7 KB payloads;
-    # this one reflects actual codec throughput (the r8 bit-reader
-    # rework — accumulator masking, 8-bit Huffman LUT, batched
-    # receive — took the codec from 0.011 to ~0.8 MB/s per core).
-    rows = [
-        (i, "image", bytearray(encode_jpeg(gradient(256, 256, i),
-                                           quality=85)), 256, 256,
-         None, None)
-        for i in range(8)
-    ]
-    mb = sum(len(r[2]) for r in rows) / 1e6
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(8).cache()
-    df.count()
-    t0 = time.time()
-    extract_features(df, fake_decode=False).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    out["media_decode_mb_per_sec_jpeg_256"] = round(
-        mb / (time.time() - t0), 3)
-    df.unpersist()
-
-    # r12: batch variant — 32 payloads on 8 partitions (4 per python
-    # worker), best-of-2. The 8x1 row above is DISPATCH-BOUND (~0.4s
-    # of worker spin-up + per-process LUT build around ~0.06s of
-    # codec), so the r12 entropy rework (measured 1.6x single-core,
-    # SCALING.md) barely moves it; this row amortizes spin-up the
-    # same way the r11 best-of-2 classifier scalars do, so the codec
-    # arc stays measured. The 8x1 row is kept for cross-round
-    # comparability.
-    rows = [
-        (i, "image", bytearray(encode_jpeg(gradient(256, 256, i),
-                                           quality=85)), 256, 256,
-         None, None)
-        for i in range(32)
-    ]
-    mb = sum(len(r[2]) for r in rows) / 1e6
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(8).cache()
-    df.count()
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        extract_features(df, fake_decode=False).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        best = min(best, time.time() - t0)
-    out["media_decode_mb_per_sec_jpeg_256_batch"] = round(mb / best, 3)
-    df.unpersist()
-
-    # r11: realistic-size PNG (256x256) — the 64x48 png row above is
-    # the same dispatch-floor artifact; this one reflects the codec
-    # after the r11 vectorization (whole-pass numpy unfilter + luma,
-    # ~180 MB/s single-core on incompressible truecolor).
-    rows = [
-        (i, "image", bytearray(encode_png(gradient(256, 256, i))),
-         256, 256, None, None)
-        for i in range(8)
-    ]
-    mb = sum(len(r[2]) for r in rows) / 1e6
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(8).cache()
-    df.count()
-    t0 = time.time()
-    extract_features(df, fake_decode=False).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    out["media_decode_mb_per_sec_png_256"] = round(
-        mb / (time.time() - t0), 3)
-    df.unpersist()
-
-    # WAV: the audio path with a trivial decode (PCM parse only), so
-    # the number is path overhead rather than codec cost.
-    rows = [
-        (i, "audio", bytearray(encode_wav(
-            [int(12000 * math.sin(2 * math.pi * (100 + 37 * i) * t / 8000))
-             for t in range(8000)], sample_rate=8000, n_channels=1)),
-         None, None, 8000, 1000)
-        for i in range(32)
-    ]
-    mb = sum(len(r[2]) for r in rows) / 1e6
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(32).cache()
-    df.count()
-    t0 = time.time()
-    extract_audio_features(df, fake_decode=False).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    out["media_decode_mb_per_sec_wav"] = round(mb / (time.time() - t0), 3)
-    df.unpersist()
-    return out
-
-
 def main() -> None:
     import shutil as _shutil
     import tempfile as _tempfile
@@ -449,8 +314,8 @@ def _run_bench() -> None:
     # r12 symmetry fix: the post probe is min-of-3 like the warm pre
     # probe — comparing a SINGLE post shot against a min-of-3 pre is
     # structurally biased upward (any transient at the one post
-    # moment — e.g. GC/worker teardown right after the r12 batched
-    # media stage — flags the whole capture; r12 saw post read
+    # moment — e.g. GC/worker teardown right after the last Python
+    # worker stage — flags the whole capture; r12 saw post read
     # 0.32-0.39 single-shot while three captures' query sets were
     # stable-to-better). A SUSTAINED host slowdown still shows: all
     # three post probes would be slow.
@@ -579,7 +444,6 @@ def _run_bench() -> None:
                 inbox_dir=tmp2 + "/inbox",
                 checkpoint_dir=tmp2 + "/ckpt",
                 flush_size=500,  # reference INGEST_BATCH_SIZE default
-                max_files_per_trigger=16,
             )
             stream.submit_many(wire_rows)
             t0 = time.time()
@@ -595,7 +459,8 @@ def _run_bench() -> None:
     streaming_rps = round(n_stream / dt_stream, 1)
 
     # Tuned streaming config: same pipeline, larger batches + slower
-    # trigger (500ms / 5000 rows / 16 files-per-trigger). The parity
+    # trigger (500ms / 5000 rows; the row budget caps a trigger at
+    # 32000 // 5000 = 6 files, as in the server). The parity
     # entry above keeps the reference's 100ms/500 defaults (ST1); this
     # one measures the engine's actual streaming ceiling when the
     # operator is free to size batches.
@@ -616,7 +481,6 @@ def _run_bench() -> None:
                 checkpoint_dir=tmp3 + "/ckpt",
                 flush_every_ms=500,
                 flush_size=5000,
-                max_files_per_trigger=16,
             )
             stream3.submit_many(wire_rows)
             t0 = time.time()
@@ -801,7 +665,6 @@ def _run_bench() -> None:
         "engine_replacing_merge_tree_schedule",  # r11 additions
         "ch_dialect_bitmap_panel",
     }
-    media = _media_decode_bench(spark)
 
     total = round(sum(v for k, v in times.items() if k not in aux), 3)
     # cross-round comparability without tail reconstruction: both
@@ -850,7 +713,6 @@ def _run_bench() -> None:
         "classifier_train_sec": classifier_train_sec,
         "classifier_score_docs_per_sec": classifier_score_dps,
         "classifier_score_docs_per_sec_10x": classifier_score_dps_10x,
-        **media,
         "sf": float(sf) if sf else None,
     }
     full = {

@@ -13,7 +13,7 @@ Spark-first:
 - streaming ingest semantics (internal/batcher/batcher.go) via
   Structured Streaming;
 - EXT large-scale training-data operators (dedup, similarity search,
-  text analysis, multimodal plumbing) with no reference counterpart.
+  text analysis) with no reference counterpart.
 
 Nothing here is a translation of the reference's Go code; the
 reference defines WHAT to compute, Spark decides HOW.

@@ -777,8 +777,7 @@ def hamming_pairs(
     <= max_hamming differing bits leave at least one chunk identical —
     bucket join on chunk keys, not all-pairs. Chunk count DERIVES from
     max_hamming (a fixed 4-chunk split silently loses recall for
-    max_hamming > 3). Shared by text simhash and image pHash
-    (operators/multimodal.image_neardup_pairs)."""
+    max_hamming > 3)."""
     if not 0 <= max_hamming <= 63:
         raise ValueError("max_hamming must be in [0, 63]")
     n_chunks = max_hamming + 1

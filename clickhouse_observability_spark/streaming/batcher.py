@@ -97,7 +97,6 @@ class IngestStream:
         inbox_dir: str,
         checkpoint_dir: str,
         flush_every_ms: int | None = None,
-        max_files_per_trigger: int | None = None,  # per-trigger size cap
         flush_size: int | None = None,
         views: list | None = None,  # RollupView-likes, applied per batch
         maintain_indexes: bool = False,
@@ -106,11 +105,11 @@ class IngestStream:
         """Knob defaults follow the reference's env-var config
         (cmd/server/main.go:25-29): INGEST_MAX_DELAY_MS -> trigger
         interval, INGEST_BATCH_SIZE -> rows per inbox file (one file ≅
-        one call's batch). max_files_per_trigger defaults to the file
-        cap TRIGGER_MAX_ROWS // flush_size, so one micro-batch holds at
-        most TRIGGER_MAX_ROWS rows however many calls are waiting; it
-        bounds a batch's size, not how fast the inbox drains.
-        Explicit arguments win over env and over the budget."""
+        one call's batch). The per-trigger cap max_files_per_trigger
+        is always the file cap TRIGGER_MAX_ROWS // flush_size, so one
+        micro-batch holds at most TRIGGER_MAX_ROWS rows however many
+        calls are waiting; it bounds a batch's size, not how fast the
+        inbox drains. Explicit arguments win over env."""
         self.spark = spark
         self.table = table
         self.inbox_dir = inbox_dir
@@ -128,11 +127,7 @@ class IngestStream:
             if flush_size is not None
             else _env_int("INGEST_BATCH_SIZE", DEFAULT_FLUSH_SIZE),
         )
-        self.max_files_per_trigger = (
-            max_files_per_trigger
-            if max_files_per_trigger is not None
-            else max(1, TRIGGER_MAX_ROWS // self.flush_size)
-        )
+        self.max_files_per_trigger = max(1, TRIGGER_MAX_ROWS // self.flush_size)
         self.views = list(views or ())
         self.maintain_indexes = bool(maintain_indexes)
         # Continuous TTL enforcement (CH: background merges apply the

@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_observability_spark.operators import rollup as R
+from clickhouse_observability_spark.sources.writer import parquet_ts_micros
 
 
 class RollupView:
@@ -83,8 +84,11 @@ class RollupView:
         name = f"inc=b{int(batch_id)}"
         inc = os.path.join(self.path, name)
         tmp = os.path.join(self.path, f".inc-b{int(batch_id)}.tmp")
-        states.write.mode("overwrite").option(
-            "compression", "zstd").parquet(tmp)
+        # bucket_ts as INT64 with footer stats; scope the batch's own
+        # session (a micro-batch runs in the stream's cloned session)
+        with parquet_ts_micros(states.sparkSession):
+            states.write.mode("overwrite").option(
+                "compression", "zstd").parquet(tmp)
         if os.path.exists(inc):
             shutil.rmtree(inc)
         os.rename(tmp, inc)
@@ -182,8 +186,9 @@ class RollupView:
         gen_name = f"inc=c{uuid.uuid4().hex[:12]}"
         gen = os.path.join(self.path, gen_name)
         tmp = os.path.join(self.path, f".{gen_name}.tmp")
-        merged.write.mode("overwrite").option(
-            "compression", "zstd").parquet(tmp)
+        with parquet_ts_micros(merged.sparkSession):
+            merged.write.mode("overwrite").option(
+                "compression", "zstd").parquet(tmp)
         os.rename(tmp, gen)
         self._publish([gen_name])
         # drop everything unreferenced: the snapshot we merged plus

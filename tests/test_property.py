@@ -268,62 +268,6 @@ def test_winnowing_property_matches_reference(spark, texts):
     assert got == exp
 
 
-@settings(max_examples=25, deadline=None)
-@given(
-    w=st.integers(1, 12),
-    h=st.integers(1, 12),
-    seed=st.integers(0, 10_000),
-    interlace=st.booleans(),
-)
-def test_png_roundtrip_property(w, h, seed, interlace):
-    """Lossless PNG: encode(decode) == PPM ground truth for arbitrary
-    geometry/content, both interlace modes."""
-    import random
-
-    from clickhouse_observability_spark.operators import multimodal as M
-
-    rnd = random.Random(seed)
-    rgb = [
-        [tuple(rnd.randrange(256) for _ in range(3)) for _ in range(w)]
-        for _ in range(h)
-    ]
-    ref = M.decode_image(M.encode_ppm(rgb))
-    assert M.decode_image(M.encode_png(rgb, interlace=1 if interlace else 0)) == ref
-
-
-@settings(max_examples=15, deadline=None)
-@given(
-    w=st.integers(1, 24),
-    h=st.integers(1, 24),
-    seed=st.integers(0, 10_000),
-    progressive=st.booleans(),
-)
-def test_jpeg_q100_roundtrip_property(w, h, seed, progressive):
-    """JPEG at q=100 (all-ones quant): near-lossless for arbitrary
-    content, and the progressive stream decodes IDENTICALLY to the
-    baseline one."""
-    import random
-
-    import numpy as np
-
-    from clickhouse_observability_spark.operators import jpeg as J
-
-    rnd = random.Random(seed)
-    rgb = [
-        [tuple(rnd.randrange(256) for _ in range(3)) for _ in range(w)]
-        for _ in range(h)
-    ]
-    base = J.decode_jpeg_luma(J.encode_jpeg(rgb, quality=100))
-    if progressive:
-        prog = J.decode_jpeg_luma(
-            J.encode_jpeg(rgb, quality=100, progressive=True)
-        )
-        assert prog == base
-    r = np.array(rgb, float)
-    y = 0.299 * r[..., 0] + 0.587 * r[..., 1] + 0.114 * r[..., 2]
-    assert np.abs(np.array(base, float) - y).max() <= 2.0
-
-
 # ---------------------------------------------------------------------------
 # CH dialect translator robustness: every expressible statement either
 # translates to Spark-ANALYZABLE SQL or raises ChDialectError — never a

@@ -115,6 +115,79 @@ def test_inbox_read_once_per_micro_batch(spark, stream):
     assert sum(r["cnt"] for r in view.query(spark).collect()) == 2 * n
 
 
+def _bucket_ts_column(part_dir):
+    """(physical type, has min/max) of bucket_ts in every parquet file
+    under an increment dir."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    out = []
+    for f in glob.glob(os.path.join(part_dir, "*.parquet")):
+        md = pq.ParquetFile(f).metadata
+        i = md.schema.names.index("bucket_ts")
+        col = md.row_group(0).column(i)
+        out.append((col.physical_type, col.statistics is not None
+                    and col.statistics.has_min_max))
+    return out
+
+
+def test_view_parts_keep_bucket_ts_stats(spark, stream):
+    # the increment is written from the stream's cloned session, so
+    # apply must scope TIMESTAMP_MICROS on that session: an INT96
+    # bucket_ts carries no footer min/max
+    s, table, view = stream
+    s.submit_many(_rows(50))
+    s.start()
+    s.query.processAllAvailable()
+    s.stop(drain=False)
+    cols = _bucket_ts_column(os.path.join(view.path, "inc=b0"))
+    assert cols and all(c == ("INT64", True) for c in cols)
+    view.compact(spark)
+    gen = [d for d in os.listdir(view.path) if d.startswith("inc=c")]
+    cols = _bucket_ts_column(os.path.join(view.path, gen[0]))
+    assert cols and all(c == ("INT64", True) for c in cols)
+
+
+def test_view_reads_int96_and_int64_increments(spark, tmp_path):
+    # a view written before increments were INT64 keeps its INT96
+    # ones; one read over both answers with the right totals
+    from clickhouse_observability_spark.sources.writer import normalize_ingest
+
+    view = RollupView(str(tmp_path / "mv"))
+    norm = normalize_ingest(spark.createDataFrame(_rows(90)))
+    old = norm.limit(40).localCheckpoint(eager=True)
+    new = norm.exceptAll(old).localCheckpoint(eager=True)
+    key = "spark.sql.parquet.outputTimestampType"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        R.build_rollup(
+            old.withColumn("__value", view.value_expr), view.granularity,
+            view.dims, value_col="__value", user_col=view.user_col,
+        ).write.parquet(os.path.join(view.path, "inc=b0"))
+    finally:
+        spark.conf.set(key, prior)
+    view.apply(new, batch_id=1)
+    assert {c[0] for c in _bucket_ts_column(
+        os.path.join(view.path, "inc=b0"))} == {"INT96"}
+    assert {c[0] for c in _bucket_ts_column(
+        os.path.join(view.path, "inc=b1"))} == {"INT64"}
+
+    got = _by_key(view.query(spark))
+    want = {
+        (r["bucket_ts"], r["service"], r["level"]): r
+        for r in norm.groupBy(
+            F.date_trunc("hour", "ts").alias("bucket_ts"), "service", "level"
+        ).agg(F.count("*").alias("cnt"),
+              F.sum(F.length("msg")).alias("sum_value")).collect()
+    }
+    assert set(got) == set(want)
+    for k in want:
+        assert got[k]["cnt"] == want[k]["cnt"]
+        assert got[k]["sum_value"] == want[k]["sum_value"]
+
+
 def test_retry_never_double_counts_view(spark, stream):
     s, table, view = stream
     s.submit_many(_rows(150))

@@ -159,7 +159,8 @@ def test_per_trigger_size_cap(spark, tmp_path):
     table = LogsTable(spark, str(tmp_path / "logs"))
     table.init_schema()
     s = IngestStream(spark, table, str(tmp_path / "inbox"),
-                     str(tmp_path / "ckpt"), max_files_per_trigger=4)
+                     str(tmp_path / "ckpt"))
+    s.max_files_per_trigger = 4
     for i in range(6):
         s.submit_many([_wire(i * 10 + j) for j in range(2)])
     try:
