@@ -47,9 +47,6 @@ HEADLINE = [
     ("window_user_gaps", "noop"),
     ("asof_click_before_purchase", "noop"),
     ("join_orders_enriched", "collect"),
-    ("tpch_q1_pricing", "collect"),
-    ("tpch_q3_shipping", "collect"),
-    ("tpch_q5_nation_revenue", "collect"),
     ("setop_except_user_days", "noop"),
     ("dedup_exact_groups", "noop"),
     ("dedup_jaccard_pairs", "noop"),
@@ -78,10 +75,8 @@ HEADLINE = [
     # r4 additions — reported but EXCLUDED from headline_total_sec so
     # totals stay comparable with earlier rounds (aux set below)
     ("dedup_exact_spans", "noop"),
-    ("tpch_q18_large_orders", "collect"),
     ("behavior_window_funnel", "collect"),
     # r5 additions — reported, excluded from headline_total_sec
-    ("tpch_q21_waiting_suppliers", "collect"),
     ("text_dsir_weights", "noop"),
     ("text_perplexity_buckets", "noop"),
     ("text_gopher_rules", "noop"),
@@ -148,8 +143,7 @@ R4_MIN_COMMON = {
     "agg_value_stats": 0.284, "agg_distinct_users": 0.331,
     "window_topn_per_type": 0.382, "window_user_gaps": 0.353,
     "asof_click_before_purchase": 0.606, "join_orders_enriched": 0.706,
-    "tpch_q1_pricing": 0.407, "tpch_q3_shipping": 0.656,
-    "tpch_q5_nation_revenue": 0.719, "setop_except_user_days": 0.302,
+    "setop_except_user_days": 0.302,
     "dedup_exact_groups": 0.446, "dedup_jaccard_pairs": 0.772,
     "dedup_minhash_pairs": 2.757, "sim_topk_bruteforce": 0.48,
     "sim_topk_ivf": 0.52, "text_winnowing": 0.601,
@@ -157,8 +151,7 @@ R4_MIN_COMMON = {
     "text_corpus_curation": 1.501, "text_contamination": 0.881,
     "text_pack_chunks": 1.2, "text_unigram_logprob": 0.622,
     "text_split_drift": 0.932, "dedup_exact_spans": 1.709,
-    "tpch_q18_large_orders": 1.01, "behavior_window_funnel": 0.322,
-    "tpch_q21_waiting_suppliers": 0.884, "text_dsir_weights": 2.862,
+    "behavior_window_funnel": 0.322, "text_dsir_weights": 2.862,
     "text_perplexity_buckets": 0.781, "text_gopher_rules": 0.97,
     "rollup_day_type_panel": 1.085, "agg_ch_functions_panel": 0.389,
     "agg_error_anomalies": 0.265, "text_log_templates": 0.402,
@@ -169,7 +162,7 @@ R4_MIN_COMMON = {
     # round-over-round totals track the surface users actually run.
     # Anchors are the r9 committed round-end capture (commit 4656d87,
     # best-of-series @ calib 1.23) — NOT r4 — so deltas for these
-    # names compare r10+ against r9, while the 43 names above keep
+    # names compare r10+ against r9, while the 38 names above keep
     # comparing against the r4 driver capture.
     "lifecycle_ttl_rollup_panel": 2.09,
     # r11: text_quality_pareto_select was REIMPLEMENTED (r10 verdict
@@ -622,10 +615,8 @@ def _run_bench() -> None:
         "corpus_ingest_20k_docs",
         "text_winnowing",  # diagnostic split; already inside text_fingerprints
         "dedup_exact_spans",  # r4 additions: reported, not summed
-        "tpch_q18_large_orders",
         "behavior_window_funnel",
-        "tpch_q21_waiting_suppliers",  # r5 additions: reported, not summed
-        "text_dsir_weights",
+        "text_dsir_weights",  # r5 additions: reported, not summed
         "text_perplexity_buckets",
         "text_gopher_rules",
         "rollup_day_type_panel",  # r4-continuation: reported, not summed

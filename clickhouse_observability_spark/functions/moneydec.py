@@ -3,10 +3,11 @@
 Cross-engine ``round(sum(double), 2)`` is a per-group coin flip
 whenever a group sum lands exactly on the half-cent boundary: double
 summation is order-dependent, the two engines (Spark, DuckDB) sum in
-different orders, and the final ulp decides the rounded cent. r8's
-``tpch_q9_product_profit`` hit this live — 2 of its 175 group sums sat
-exactly on the boundary at sf0.01 (NATION_3/1997 = 1964425.435,
-distance 0.0) and the driver hash flipped.
+different orders, and the final ulp decides the rounded cent. In r8
+a registry entry hit this live — 2 of its 175 group sums sat exactly
+on the boundary at sf0.01 (1964425.435, distance 0.0) and the driver
+hash flipped (CHANGELOG.md); the CI registry gate
+(tests/test_oracle_registry.py) now runs every oracle against DuckDB.
 
 Structural fix (applies to BOTH engines, Spark here and the textual
 oracle SQL at each registry site): cast money columns to
@@ -67,9 +68,7 @@ def money_sum(expr: str | Column, ndigits: int = 2) -> Column:
     mathematically identical to the decimal route. A prebuilt Column
     (decimal products etc.) sums in decimal; the trailing double cast
     keeps the published schema (and the driver's float
-    canonicalization) identical either way. For the ubiquitous
-    price*(1-discount) product prefer `revenue_sum_d` over a decimal
-    Column (same result, ~1.5-2x faster). Oracle-SQL counterpart::
+    canonicalization) identical either way. Oracle-SQL counterpart::
 
         CAST(round(sum(<dec expr>), n) AS DOUBLE)
     """
@@ -141,7 +140,8 @@ def units_d(col: str | Column, scale: float) -> Column:
     doubles is order-independent and exact while every partial stays
     below 2^53 (|dollars| < ~9e11 per group at 1e-4 grain).
 
-    Measured on TPC-H Q1 @ sf0.1 (paired, interleaved — this host's
+    Measured on a Q1-shaped lineitem pricing summary @ sf0.1 (an
+    entry since deleted; paired, interleaved — this host's
     frequency swings 2x between sessions, so only same-session pairs
     mean anything): raw double-unit sums track the plain double-sum
     plan within ~15-20% (the per-row conversion), where the BIGINT
@@ -163,16 +163,6 @@ def units_d(col: str | Column, scale: float) -> Column:
 def units4d(col: str | Column) -> Column:
     """Double-carried exact 1e-4-dollar units (see units_d)."""
     return units_d(col, 10000.0)
-
-
-def centsd(col: str | Column) -> Column:
-    """Double-carried exact cents of a 2dp money double."""
-    return units_d(col, 100.0)
-
-
-def pctd(col: str | Column) -> Column:
-    """Double-carried exact 1e-2 units of a 2dp fraction."""
-    return units_d(col, 100.0)
 
 
 #: 2^53 — the largest double above which consecutive integers are no
@@ -211,20 +201,6 @@ def units_avg_d(units_expr: Column, cnt: Column, scale: int = 10000,
     """units_avg over DOUBLE-carried exact units (guarded)."""
     dollars = _guard_exact_d(F.sum(units_expr)) / F.lit(float(scale))
     return floor_quantize(dollars / cnt, ndigits)
-
-
-def revenue_sum_d(price: str | Column, discount: str | Column,
-                  ndigits: int = 2) -> Column:
-    """round(sum(price * (1 - discount)), n) — TPC-H's ubiquitous
-    revenue aggregate — in double-carried exact units:
-    cents(price) * (100 - pct(discount)) is the exact 1e-4-dollar
-    product, summed unchecked-primitive (see units_d), quantized
-    integer-HALF_UP once per group. Bit-identical to the oracle's
-    CAST(round(sum(CAST(p AS DECIMAL(18,4)) * (1 - CAST(d AS
-    DECIMAL(18,4)))), n) AS DOUBLE) and ~1.5-2x faster than the wide
-    decimal product sum under ANSI mode."""
-    return units_money_sum_d(
-        centsd(price) * (100 - pctd(discount)), 10000, ndigits)
 
 
 def units_money_sum(units_expr: Column, scale: int = 10000,

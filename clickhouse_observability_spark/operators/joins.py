@@ -8,28 +8,16 @@ star joins — expressed so Catalyst picks the physical strategy:
 - dimension tables (region 5, nation 25, supplier 100, customer 1.5k
   per sf0.01) sit far under the broadcast threshold -> BroadcastHashJoin,
   no shuffle of the fact side;
-- fact⋈fact (lineitem⋈orders) shuffles on the join key; AQE handles
-  skew splitting at runtime. At 100 TB co-locating both facts by
-  bucketing on orderkey would eliminate that shuffle entirely — the
-  write-side convention, not a query change.
+- fact⋈fact shuffles both sides on the join key; AQE handles skew
+  splitting at runtime. At 100 TB co-locating both facts by bucketing
+  on the join key (sources/bucketing.py) would eliminate that shuffle
+  entirely — the write-side convention, not a query change.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from clickhouse_observability_spark.functions.moneydec import (
-    centsd,
-    dec,
-    floor_quantize,
-    money_sum,
-    pctd,
-    revenue_sum_d,
-    units4d,
-    units_avg_d,
-    units_money_sum_d,
-)
 
 
 def orders_enriched(
@@ -48,100 +36,6 @@ def orders_enriched(
         )
         .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
         .limit(limit)
-    )
-
-
-def pricing_summary(lineitem: DataFrame, cutoff: str = "1998-09-02") -> DataFrame:
-    """TPC-H Q1-shaped pricing summary: the canonical partial-agg
-    showcase (5 aggregates over 2 grouping keys of cardinality ~6 —
-    the shuffle moves a handful of rows regardless of input size).
-    Money/quantity sums run in exact integer units CARRIED AS DOUBLES
-    — the moneydec ANSI fast path (units_d): the unit values are
-    exact integers, their double sums are exact and order-independent
-    below 2^53 (guarded loudly), and the plan's row loop has zero
-    overflow-checked BIGINT ops (the r9 BIGINT units paid ANSI's
-    per-row overflow checks — r9 verdict #1's q1 delta; see the
-    units_d docstring for the measured breakdown: the row loop now
-    tracks the plain double-sum plan, the exactness
-    quantize+guard is a flat ~0.1s/execution result-projection
-    cost). Bit-identical to the oracle's DECIMAL(18,4) arithmetic;
-    the product folds as cents(price) * (100 - pct(discount)) =
-    exact 1e-4-dollar units; avg_disc reuses the pct units (x100 =
-    1e-4 fraction units) instead of a fourth per-row conversion.
-    PRECONDITION (r10 advisor): the pct-units reuse quantizes
-    l_discount at 2 decimal digits — exact for TPC-H data, where
-    discounts are 0.00-0.10 in cent steps, but a 3-4dp discount
-    value would quantize differently from the DECIMAL(18,4) oracle.
-    If the input ever carries >2dp discounts, restore a fourth
-    per-row units4d(l_discount) conversion for avg_disc."""
-    cnt = F.count(F.lit(1))
-    # one unit conversion per column per row (the price cents feed
-    # both the base-price sum — x100 — and the discount product)
-    u = (
-        lineitem.filter(F.col("l_shipdate") <= F.lit(cutoff).cast("timestamp"))
-        .select(
-            "l_returnflag",
-            "l_linestatus",
-            units4d("l_quantity").alias("__uq"),
-            centsd("l_extendedprice").alias("__ce"),
-            pctd("l_discount").alias("__pd"),
-        )
-    )
-    return u.groupBy("l_returnflag", "l_linestatus").agg(
-        units_money_sum_d(F.col("__uq")).alias("sum_qty"),
-        units_money_sum_d(F.col("__ce") * 100).alias("sum_base_price"),
-        units_money_sum_d(F.col("__ce") * (100 - F.col("__pd"))).alias(
-            "sum_disc_price"
-        ),
-        units_avg_d(F.col("__uq"), cnt, ndigits=4).alias("avg_qty"),
-        units_avg_d(F.col("__pd") * 100, cnt, ndigits=6).alias("avg_disc"),
-        F.count(F.lit(1)).alias("count_order"),
-    )
-
-
-def shipping_priority(
-    customer: DataFrame, orders: DataFrame, lineitem: DataFrame,
-    segment: str = "BUILDING", date: str = "1996-03-15", limit: int = 10,
-) -> DataFrame:
-    """TPC-H Q3-shaped: top revenue orders for a market segment.
-    customer broadcasts; lineitem⋈orders shuffles on orderkey."""
-    c = customer.filter(F.col("c_mktsegment") == segment)
-    o = orders.filter(F.col("o_orderdate") < F.lit(date).cast("timestamp"))
-    l = lineitem.filter(F.col("l_shipdate") > F.lit(date).cast("timestamp"))
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            revenue_sum_d("l_extendedprice", "l_discount").alias("revenue")
-        )
-        .orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())
-        .limit(limit)
-    )
-
-
-def nation_revenue(
-    lineitem: DataFrame, orders: DataFrame, customer: DataFrame,
-    supplier: DataFrame, nation: DataFrame,
-    frm: str = "1996-01-01", to: str = "1997-01-01",
-) -> DataFrame:
-    """TPC-H Q5-shaped local-supplier volume: revenue by nation where
-    the customer and supplier share a nation. Two broadcast dims +
-    one fact-fact shuffle."""
-    o = orders.filter(
-        (F.col("o_orderdate") >= F.lit(frm).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(to).cast("timestamp"))
-    )
-    return (
-        lineitem.join(o, lineitem.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(customer), o.o_custkey == customer.c_custkey)
-        .join(F.broadcast(supplier), lineitem.l_suppkey == supplier.s_suppkey)
-        .filter(F.col("c_nationkey") == F.col("s_nationkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == nation.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            revenue_sum_d("l_extendedprice", "l_discount").alias("revenue")
-        )
     )
 
 

@@ -1,7 +1,8 @@
 """Registry entries for the ClickHouse aggregate-function family.
 
 Two oracle-backed panels over `events` (registered AFTER the 50-slot
-adjudication window; oracles executed in pytest, the tpch_* pattern):
+adjudication window; oracles executed in pytest by the CI registry
+gate, tests/test_oracle_registry.py):
 
 - `agg_ch_functions_panel` — argMax/argMin (deterministic struct
   extremes), exact topK(3), sumIf/countIf/avgIf, fixed-bin histogram

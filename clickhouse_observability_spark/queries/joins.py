@@ -4,14 +4,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from clickhouse_observability_spark.functions.moneydec import (
-    centsd,
-    dec,
-    floor_quantize,
-    money_sum,
-    pctd,
-    units_money_sum_d,
-)
 from clickhouse_observability_spark.operators import joins as J
 from clickhouse_observability_spark.registry import register, table
 
@@ -34,193 +26,6 @@ def join_orders_enriched(spark, sf_dir):
         table(spark, sf_dir, "customer"),
         table(spark, sf_dir, "nation"),
         table(spark, sf_dir, "region"),
-    )
-
-
-@register(
-    "tpch_q1_pricing",
-    oracle="""
-    SELECT l_returnflag, l_linestatus,
-           CAST(round(sum(CAST(l_quantity AS DECIMAL(18,4))), 2) AS DOUBLE)
-             AS sum_qty,
-           CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))), 2) AS DOUBLE)
-             AS sum_base_price,
-           CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                          * (1 - CAST(l_discount AS DECIMAL(18,4)))), 2)
-                AS DOUBLE) AS sum_disc_price,
-           floor(CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
-                 / count(*) * 10000.0) / 10000.0 AS avg_qty,
-           floor(CAST(sum(CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE)
-                 / count(*) * 1000000.0) / 1000000.0 AS avg_disc,
-           count(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def tpch_q1_pricing(spark, sf_dir):
-    return J.pricing_summary(table(spark, sf_dir, "lineitem"))
-
-
-@register(
-    "tpch_q3_shipping",
-    oracle="""
-    SELECT l_orderkey, o_orderdate, o_orderpriority,
-           CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                          * (1 - CAST(l_discount AS DECIMAL(18,4)))), 2)
-                AS DOUBLE) AS revenue
-    FROM lineitem
-    JOIN orders ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
-    WHERE c_mktsegment = 'BUILDING'
-      AND o_orderdate < TIMESTAMP '1996-03-15 00:00:00'
-      AND l_shipdate > TIMESTAMP '1996-03-15 00:00:00'
-    GROUP BY l_orderkey, o_orderdate, o_orderpriority
-    ORDER BY revenue DESC, l_orderkey ASC
-    LIMIT 10
-    """,
-)
-def tpch_q3_shipping(spark, sf_dir):
-    return J.shipping_priority(
-        table(spark, sf_dir, "customer"),
-        table(spark, sf_dir, "orders"),
-        table(spark, sf_dir, "lineitem"),
-    )
-
-
-@register(
-    "tpch_q5_nation_revenue",
-    oracle="""
-    SELECT n_name,
-           CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                          * (1 - CAST(l_discount AS DECIMAL(18,4)))), 2)
-                AS DOUBLE) AS revenue
-    FROM lineitem
-    JOIN orders ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
-    JOIN supplier ON l_suppkey = s_suppkey
-    JOIN nation ON c_nationkey = n_nationkey
-    WHERE c_nationkey = s_nationkey
-      AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
-    GROUP BY n_name
-    """,
-)
-def tpch_q5_nation_revenue(spark, sf_dir):
-    return J.nation_revenue(
-        table(spark, sf_dir, "lineitem"),
-        table(spark, sf_dir, "orders"),
-        table(spark, sf_dir, "customer"),
-        table(spark, sf_dir, "supplier"),
-        table(spark, sf_dir, "nation"),
-    )
-
-
-@register(
-    "tpch_q4_order_priority",
-    oracle="""
-    SELECT o_orderpriority, count(*) AS order_count
-    FROM orders
-    WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND o_orderdate <  TIMESTAMP '1996-04-01 00:00:00'
-      AND EXISTS (
-          SELECT 1 FROM lineitem
-          WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate
-      )
-    GROUP BY o_orderpriority
-    """,
-)
-def tpch_q4_order_priority(spark, sf_dir):
-    """Q4 shape: EXISTS correlated subquery -> Catalyst decorrelates
-    to a left-semi join; one shuffle on orderkey."""
-    from pyspark.sql import functions as F
-
-    orders = table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp"))
-    )
-    lineitem = table(spark, sf_dir, "lineitem")
-    late = orders.join(
-        lineitem,
-        (orders.o_orderkey == lineitem.l_orderkey)
-        & (lineitem.l_shipdate > orders.o_orderdate),
-        "left_semi",
-    )
-    return late.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("order_count"))
-
-
-@register(
-    "tpch_q17_small_quantity",
-    oracle="""
-    SELECT floor(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
-                 / 7.0 * 100.0) / 100.0 AS avg_yearly
-    FROM lineitem
-    JOIN part ON p_partkey = l_partkey
-    WHERE p_brand = 'Brand#1'
-      AND 5 * CAST(l_quantity AS DECIMAL(18,4))
-            * (SELECT count(*) FROM lineitem l2
-               WHERE l2.l_partkey = lineitem.l_partkey)
-          < (SELECT sum(CAST(l_quantity AS DECIMAL(18,4))) FROM lineitem l2
-             WHERE l2.l_partkey = lineitem.l_partkey)
-    """,
-)
-def tpch_q17_small_quantity(spark, sf_dir):
-    """Q17 shape: correlated scalar-aggregate subquery, expressed as
-    a pre-aggregated broadcast join (the plan Catalyst's decorrelation
-    produces, written explicitly: per-part thresholds are tiny).
-    qty < 0.2*avg(qty) compares as 5*qty*cnt < sum in exact decimal
-    (same predicate, no order-dependent double avg — moneydec), and
-    the /7.0 output floor-quantizes the identical-double quotient."""
-    from pyspark.sql import functions as F
-
-    lineitem = table(spark, sf_dir, "lineitem")
-    part = table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1")
-    thresholds = lineitem.groupBy("l_partkey").agg(
-        F.sum(dec("l_quantity")).alias("qty_sum"),
-        F.count(F.lit(1)).alias("qty_cnt"),
-    )
-    return (
-        lineitem.join(F.broadcast(part), lineitem.l_partkey == part.p_partkey)
-        .join(thresholds, "l_partkey")
-        .filter(5 * dec("l_quantity") * F.col("qty_cnt") < F.col("qty_sum"))
-        .agg(
-            floor_quantize(
-                F.sum(dec("l_extendedprice")).cast("double") / 7.0, 2
-            ).alias("avg_yearly")
-        )
-    )
-
-
-@register(
-    "tpch_q6_forecast",
-    oracle="""
-    SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                          * CAST(l_discount AS DECIMAL(18,4))), 2) AS DOUBLE)
-           AS revenue
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-      AND l_discount BETWEEN 0.05 AND 0.07
-      AND l_quantity < 24
-    """,
-)
-def tpch_q6_forecast(spark, sf_dir):
-    """Q6 shape: the pure scan-filter-aggregate — no join, no groupBy
-    key, one map-side partial sum. The whole query should be a single
-    WholeStageCodegen span over the pushed-down scan; at 100 TB it is
-    exactly scan-bandwidth-bound, which is the point of including it."""
-    from pyspark.sql import functions as F
-
-    li = table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= "1996-01-01")
-            & (F.col("l_shipdate") < "1997-01-01")
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(units_money_sum_d(centsd("l_extendedprice") * pctd("l_discount")).alias("revenue"))
     )
 
 

@@ -1,7 +1,8 @@
 """Registry entries for the alerting/triage tier: anomaly scoring
 over bucket-grain aggregates and log template mining. Registers
 AFTER the 50-slot adjudication window; oracles executed in pytest
-(tests/test_observability.py) like the tpch_* pattern.
+(tests/test_observability.py and the CI registry gate,
+tests/test_oracle_registry.py).
 """
 
 from __future__ import annotations

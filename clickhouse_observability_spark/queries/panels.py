@@ -4,11 +4,8 @@ The driver adjudicates only the first 50 oracle-backed registry
 entries (CORRECTNESS cap). Each panel here UNIONS two or three
 previously-adjudicated entries into one op-tagged result (the
 `dedup_exact_groups` fp_mode pattern), freeing window slots for
-flagship rotations — r5 rotated in tpch_q21/behavior_window_funnel/
-text_epoch_shards/rollup+chfuncs/dsir; r6 rotated in
-window_gap_fill_hourly/behavior_sequence_match/dedup_exact_spans/
-text_bm25_search and then asof_general_join/
-pipeline_hybrid_retrieval — see registry._WINDOW_ORDER.
+flagship rotations — see registry._WINDOW_ORDER; the rotation
+history is in CHANGELOG.md.
 
 No adjudicated semantics are dropped: every panel arm IS the
 original registered callable (imported and invoked, not re-derived),
@@ -36,10 +33,6 @@ from clickhouse_observability_spark.queries.dedup import (
     dedup_jaccard_pairs,
     dedup_keep_first,
     dedup_ngram_jaccard_pairs,
-)
-from clickhouse_observability_spark.queries.joins import (
-    tpch_q6_forecast,
-    tpch_q17_small_quantity,
 )
 from clickhouse_observability_spark.queries.windows import (
     window_rank_suite,
@@ -236,48 +229,6 @@ def dedup_jaccard_panel(spark, sf_dir):
         F.col("gram_mode").alias("mode"), "doc_a", "doc_b", "jaccard"
     )
     return tok.unionByName(grams)
-
-
-@register(
-    "tpch_scalar_panel",
-    oracle="""
-    SELECT 'q6_forecast' AS op,
-           CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                          * CAST(l_discount AS DECIMAL(18,4))), 2) AS DOUBLE)
-             AS value
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-      AND l_discount BETWEEN 0.05 AND 0.07
-      AND l_quantity < 24
-    UNION ALL
-    SELECT 'q17_small_quantity',
-           floor(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
-                 / 7.0 * 100.0) / 100.0
-    FROM lineitem
-    JOIN part ON p_partkey = l_partkey
-    WHERE p_brand = 'Brand#1'
-      AND 5 * CAST(l_quantity AS DECIMAL(18,4))
-            * (SELECT count(*) FROM lineitem l2
-               WHERE l2.l_partkey = lineitem.l_partkey)
-          < (SELECT sum(CAST(l_quantity AS DECIMAL(18,4))) FROM lineitem l2
-             WHERE l2.l_partkey = lineitem.l_partkey)
-    """,
-)
-def tpch_scalar_panel(spark, sf_dir):
-    """The two single-row scalar-aggregate TPC-H shapes op-tagged in
-    one slot: Q6 (pure scan-filter-agg, one WholeStageCodegen span)
-    and Q17 (correlated scalar subquery decorrelated into a
-    pre-aggregated broadcast join). Arms ARE the original adjudicated
-    callables; the union of two 1-row frames adds no shuffle."""
-    q6 = tpch_q6_forecast(spark, sf_dir).select(
-        F.lit("q6_forecast").alias("op"), F.col("revenue").alias("value")
-    )
-    q17 = tpch_q17_small_quantity(spark, sf_dir).select(
-        F.lit("q17_small_quantity").alias("op"),
-        F.col("avg_yearly").alias("value"),
-    )
-    return q6.unionByName(q17)
 
 
 @register(
@@ -669,14 +620,14 @@ def sim_topk_panel(spark, sf_dir):
 
 
 # ---------------------------------------------------------------- r7
-# Third rotation wave: five more slot-merges freeing six window slots
+# Third rotation wave: five more slot-merges freeing window slots
 # for projection_served_panel + mutation_post_read (the r6 storage
 # layers, now driver-adjudicated end-to-end), sim_semantic_
-# contamination, dedup_cluster_keeplist, tpch_q8_market_share, and the
-# in-place upgrade of the two asof slots to the full variant matrix
-# (asof_variants_panel). Same contract as every prior wave: arms ARE
-# the original adjudicated callables, merged-away entries keep their
-# own oracles (pytest-DuckDB) directly after the window.
+# contamination, dedup_cluster_keeplist, and the in-place upgrade of
+# the two asof slots to the full variant matrix (asof_variants_panel).
+# Same contract as every prior wave: arms ARE the original adjudicated
+# callables, merged-away entries keep their own oracles (pytest-DuckDB)
+# directly after the window.
 
 # imported for @register side effects so _ORACLES has the arm texts
 # at decoration time (selection loads after panels in _load_all)

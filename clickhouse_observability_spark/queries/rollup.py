@@ -9,7 +9,8 @@ additive measure; the approximate state columns (HLL uniques,
 DDSketch quantiles) are accuracy-bounded in tests/test_rollup.py.
 
 Registers AFTER the 50-slot adjudication window (registry.py order);
-the oracle is executed in pytest like the tpch_* entries.
+the oracle is executed in pytest by the CI registry gate
+(tests/test_oracle_registry.py).
 """
 
 from __future__ import annotations

@@ -13,8 +13,8 @@ at sf=0.01 (BASELINE.md), so:
   order-independent, so round() agrees bit-for-bit. Rounding a
   DOUBLE sum is NOT enough — summation order differs between
   engines, and a group sum landing exactly on the half-cent
-  boundary flips the rounded digit (r8: tpch_q9_product_profit,
-  2 of 175 groups);
+  boundary flips the rounded digit (r8: 2 of 175 groups of one
+  entry; CHANGELOG.md);
 - quotients (avg, ratio-of-sums, per-row division) quantize with
   floor(x * 10^N)/10^N over bit-identical inputs, never round():
   Spark rounds the shortest decimal string HALF_UP, DuckDB rounds
@@ -29,7 +29,7 @@ at sf=0.01 (BASELINE.md), so:
   integer sum() (plain, windowed, and via UNION type resolution) to
   HUGEINT (int128), which the driver's hash canonicalization renders
   differently from Spark's LONG even when every value is identical
-  (r10: text_mixture_temperature, tpch_q12_priority_classes).
+  (r10: text_mixture_temperature and one more entry; CHANGELOG.md).
   Wrap integer aggregates as CAST(sum(...) AS BIGINT). fetchall()
   coerces HUGEINT to Python int, so ONLY the plan-level type audit
   in tests/test_oracle_registry.py can see this class — never
@@ -93,7 +93,7 @@ _WINDOW_ORDER = [
     "sim_contrastive_mining",
     "pipeline_retrieval",
     "dedup_corpus_index_digests",
-    "tpch_q12_priority_classes",
+    "join_trace_correlation",
     "lifecycle_conditional_ttl_panel",
     "text_split_drift",
     "text_c4_filters",
@@ -182,7 +182,6 @@ def _load_all() -> None:
         # module load order); non-window oracle entries from the
         # modules below sort after it in registration order
         "spans",
-        "tpch_extra",
         "behavioral",
         "selection",
         "rollup",

@@ -65,8 +65,8 @@ def test_summap_merges_keys(spark):
 
 def test_chfuncs_oracles_match_duckdb(spark, sf_med):
     """Executes the agg_ch_* oracle strings against DuckDB at the
-    driver's adjudication scale (post-window entries; the tpch_*
-    pattern)."""
+    driver's adjudication scale (post-window entries; the CI registry
+    gate in tests/test_oracle_registry.py runs them too)."""
     import duckdb
 
     from clickhouse_observability_spark.registry import oracle_sql, queries

@@ -198,11 +198,13 @@ def test_adjudication_window_composition():
     # r5 rotations: flagship entries now under the driver's gate.
     # r10 rotation: ten multi-round-green names left the window
     # (their oracles stay CI-gated — pinned in the merged/rotated
-    # list below); in: the r9 flagships and the last TPC-H batch.
+    # list below); in: the r9 flagships.
     for flagship in (
         "lifecycle_ttl_rollup_panel",
         "text_mixture_temperature",
-        "tpch_q12_priority_classes",
+        # TPC-H deletion: the log-path self-join takes the slot of
+        # the deleted TPC-H entry
+        "join_trace_correlation",
         # r13 second wave: the final six never-adjudicated entries +
         # the new fused-index digests projection — backlog burned to
         # zero (out: seven 3-round-green rows, CI-gated below)
@@ -216,11 +218,9 @@ def test_adjudication_window_composition():
         # r6 rotation: three more panel merges + four round-5 flagships
         # r6 second wave
         # r7 rotation: five merges + the storage-lifecycle layers,
-        # semantic decontamination, the clustering keep-list, and two
-        # more TPC-H flagships
+        # semantic decontamination and the clustering keep-list
         # r8 rotation: the dialect's end-to-end path, the r7 operators'
-        # first independent adjudication, partition lifecycle, and four
-        # fresh TPC-H shapes
+        # first independent adjudication and partition lifecycle
         # r13 rotation: the conditional-TTL flagship + thirteen
         # never-adjudicated backlog entries (r12 verdict #1), led by
         # the r4-r8 dodgers
@@ -279,8 +279,6 @@ def test_adjudication_window_composition():
         "window_rank_suite",
         "dedup_jaccard_pairs",
         "dedup_ngram_jaccard_pairs",
-        "tpch_q6_forecast",
-        "tpch_q17_small_quantity",
         "dedup_exact_groups",
         "dedup_keep_first",
         "window_user_gaps",
@@ -313,8 +311,6 @@ def test_adjudication_window_composition():
         # under the CI registry gate
         "logs_count",
         "agg_latency_percentiles",
-        "tpch_q3_shipping",
-        "tpch_q4_order_priority",
         "join_semi_anti_customers",
         "window_rank_panel",
         "setop_dedup_user_panel",
@@ -329,11 +325,8 @@ def test_adjudication_window_composition():
         # r9 rotation-outs: multi-round driver-green, oracles retained
         # under the CI registry gate
         "join_orders_enriched",
-        "tpch_q5_nation_revenue",
-        "tpch_scalar_panel",
         "agg_hourly_panel",
         "join_interval_error_bursts",
-        "join_trace_correlation",
         "asof_variants_panel",
         "dedup_embedding_pairs",
         "text_unigram_logprob",
@@ -350,10 +343,8 @@ def test_adjudication_window_composition():
         "projection_served_panel",
         "sim_semantic_contamination",
         "dedup_cluster_keeplist",
-        "tpch_q8_market_share",
         # r10 rotation-outs: multi-round driver-green, oracles
         # retained under the CI registry gate
-        "tpch_q21_waiting_suppliers",
         "agg_grouping_panel",
         "dedup_jaccard_panel",
         "dedup_exact_panel",
@@ -365,25 +356,16 @@ def test_adjudication_window_composition():
         "sim_topk_panel",
         # r12 rotation-outs: multi-round driver-green, oracles
         # retained under the CI registry gate
-        "tpch_q2_min_cost_supplier",
         "ch_dialect_hourly_panel",
         "text_chunk_overlap",
         "text_stratified_sample",
         "behavior_retention",
         "dedup_span_removal",
-        "tpch_q13_order_distribution",
-        "tpch_q18_large_orders",
-        "tpch_q20_excess_shippers",
         "lifecycle_schema_evolution_panel",
         "text_bloom_decontaminate",
         "text_bigram_logprob",
         # r13 rotation-outs: multi-round driver-green, oracles
         # retained under the CI registry gate
-        "tpch_q7_volume_shipping",
-        "tpch_q10_returned_items",
-        "tpch_q14_promo_revenue",
-        "tpch_q19_disjunctive_revenue",
-        "tpch_q9_product_profit",
         "agg_entropy",
         "agg_topk_weighted",
         "agg_weighted_quantiles",
@@ -398,10 +380,6 @@ def test_adjudication_window_composition():
         "pipeline_retrieval_eval",
         "text_dataset_card",
         "text_corpus_audit",
-        "tpch_q11_important_values",
-        "tpch_q15_top_supplier",
-        "tpch_q16_supplier_diversity",
-        "tpch_q22_dormant_customers",
     ):
         assert merged in oracles and merged not in registry._WINDOW_ORDER, merged
 
@@ -479,20 +457,12 @@ def test_panel_arms_equal_source_entries(spark, sf_small):
 
 def test_r5_panel_arms_equal_source_entries(spark, sf_small):
     """Same contract for the second r5 rotation's panels: each arm's
-    rows equal the standalone adjudicated entry's rows (and for the
-    1-row scalar arms, the VALUES match, not just counts)."""
+    rows equal the standalone adjudicated entry's rows."""
     from pyspark.sql import functions as F
 
     from clickhouse_observability_spark import registry
 
     qs = registry.queries()
-
-    scal = {r.op: r.value for r in qs["tpch_scalar_panel"](spark, sf_small).collect()}
-    assert scal["q6_forecast"] == qs["tpch_q6_forecast"](spark, sf_small).collect()[0].revenue
-    assert (
-        scal["q17_small_quantity"]
-        == qs["tpch_q17_small_quantity"](spark, sf_small).collect()[0].avg_yearly
-    )
 
     dex = qs["dedup_exact_panel"](spark, sf_small)
     assert (

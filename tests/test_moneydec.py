@@ -2,9 +2,9 @@
 
 The class being closed: ``round(sum(double), 2)`` flips the rounded
 cent when a group sum lands exactly on the half-cent boundary,
-because double summation is order-dependent (r8's
-``tpch_q9_product_profit``: 2 of 175 group sums sat on the boundary
-at sf0.01 and the driver hash mismatched). The structural fix sums
+because double summation is order-dependent (r8: 2 of one entry's
+175 group sums sat on the boundary at sf0.01 and the driver hash
+mismatched; CHANGELOG.md). The structural fix sums
 in DECIMAL(18,4) — exact, order-independent — on BOTH engines.
 
 These tests pin the policy from three sides:

@@ -131,8 +131,8 @@ def test_no_oracle_emits_int128(sf_small):
     windowed, and through UNION type resolution — to HUGEINT
     (int128). The driver's hash canonicalization renders HUGEINT
     differently from Spark's LONG even when every value is
-    bit-identical (r10: text_mixture_temperature and
-    tpch_q12_priority_classes went hash-red on exactly this).
+    bit-identical (r10: text_mixture_temperature and one more entry
+    went hash-red on exactly this; CHANGELOG.md).
     fetchall() coerces HUGEINT to Python int, so the value-hash
     test above is structurally blind to the class; this audit reads
     the PLAN-level result types instead (relation .types — no

@@ -7,10 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from clickhouse_observability_spark import plans as P
-from clickhouse_observability_spark.operators.joins import (
-    orders_enriched,
-    shipping_priority,
-)
+from clickhouse_observability_spark.operators.joins import orders_enriched
 from clickhouse_observability_spark.operators.query_logs import query_events
 from clickhouse_observability_spark.sources.parquet import load_table
 
@@ -45,16 +42,6 @@ def test_dim_joins_broadcast(spark, sf_small):
     assert P.has_broadcast_join(df)
     # no shuffle needed for the dim chain itself: broadcast all the way
     assert "SortMergeJoin" not in P.executed_plan(df)
-
-
-def test_q3_single_fact_shuffle(spark, sf_small):
-    df = shipping_priority(
-        load_table(spark, sf_small, "customer"),
-        load_table(spark, sf_small, "orders"),
-        load_table(spark, sf_small, "lineitem"),
-    )
-    plan = P.executed_plan(df)
-    assert "BroadcastHashJoin" in plan  # customer side broadcasts
 
 
 def test_asof_join_single_shuffle(spark, sf_small):
@@ -138,32 +125,6 @@ def test_repetition_two_shuffles_one_scan(spark, sf_small):
     assert "Window" not in plan and "Join" not in plan
 
 
-def test_q6_single_codegen_span_with_pushdown(spark, sf_small):
-    # Q6 is the pure scan-filter-aggregate: filters reach the scan and
-    # the whole query (scan -> filter -> partial agg) runs in fused
-    # codegen stages with a single exchange for the final 1-row agg.
-    from clickhouse_observability_spark.registry import queries
-
-    from clickhouse_observability_spark.plans.explain import (
-        pushed_filters,
-        shuffle_count,
-        whole_stage_codegen_spans,
-    )
-
-    # Q6 pushes 8 filters; the default 100-char metadata truncation
-    # would eat the closing bracket pushed_filters() parses for.
-    spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
-    try:
-        out = queries()["tpch_q6_forecast"](spark, sf_small)
-        assert shuffle_count(out) <= 1  # single-partition agg exchange
-        pf = " ".join(pushed_filters(out))
-        assert "l_discount" in pf and "l_quantity" in pf
-        out.collect()  # AQE materializes codegen markers post-run
-        assert whole_stage_codegen_spans(out) >= 1
-    finally:
-        spark.conf.unset("spark.sql.maxMetadataStringLength")
-
-
 def test_winnowing_is_map_only(spark, sf_small):
     # map-only claim: per-doc array math, zero Exchange anywhere
     # (except the adaptive small-corpus respread, which is itself the
@@ -206,55 +167,6 @@ def test_quality_sample_is_map_only(spark, sf_small):
 
     docs = load_table(spark, sf_small, "documents")
     assert shuffle_count(quality_weighted_sample(docs)) == 0
-
-
-def test_tpch_extra_plan_shapes(spark, sf_small):
-    """r4 TPC-H extension: dimensions broadcast, top-N fuses."""
-    from clickhouse_observability_spark.registry import queries
-
-    qs = queries()
-    # Q10/Q18 carry ORDER BY + LIMIT: must fuse to TakeOrderedAndProject
-    for name in ("tpch_q10_returned_items", "tpch_q18_large_orders"):
-        assert P.has_take_ordered(qs[name](spark, sf_small)), name
-    # Q7/Q8/Q14: every dimension side broadcasts
-    for name in (
-        "tpch_q7_volume_shipping",
-        "tpch_q8_market_share",
-        "tpch_q14_promo_revenue",
-    ):
-        assert P.has_broadcast_join(qs[name](spark, sf_small)), name
-
-
-def test_tpch_r5_plan_shapes(spark, sf_small):
-    """r5 TPC-H completion: the remaining shapes keep their scale
-    story — dimensions/exclusion-sets broadcast, semi/anti joins stay
-    joins (no subquery re-execution), scalar subqueries are 1-row
-    broadcasts, top-N fuses."""
-    from clickhouse_observability_spark.registry import queries
-
-    qs = queries()
-    for name in (
-        "tpch_q2_min_cost_supplier",
-        "tpch_q9_product_profit",
-        "tpch_q11_important_values",
-        "tpch_q15_top_supplier",
-        "tpch_q16_supplier_diversity",
-        "tpch_q19_disjunctive_revenue",
-        "tpch_q20_excess_shippers",
-        "tpch_q22_dormant_customers",
-    ):
-        assert P.has_broadcast_join(qs[name](spark, sf_small)), name
-    # Q2/Q21 carry ORDER BY + LIMIT over small results
-    for name in ("tpch_q2_min_cost_supplier", "tpch_q21_waiting_suppliers"):
-        assert P.has_take_ordered(qs[name](spark, sf_small)), name
-    # Q21's EXISTS/NOT EXISTS decorrelate to one semi + one anti join
-    plan = P.executed_plan(qs["tpch_q21_waiting_suppliers"](spark, sf_small))
-    assert "LeftSemi" in plan and "LeftAnti" in plan
-    # Q19's part-only disjunction (brand/size bounds) pushes to the scan
-    pushed = " ".join(
-        P.pushed_filters(qs["tpch_q19_disjunctive_revenue"](spark, sf_small))
-    )
-    assert "p_brand" in pushed or "Or" in pushed
 
 
 def test_interval_delta_aggs_are_window_sweeps(spark, sf_small):
@@ -382,7 +294,6 @@ def test_panel_arms_linted_individually(spark, sf_small):
         "window_rank_panel": ("window_topn_per_type", "window_rank_suite"),
         "dedup_jaccard_panel": ("dedup_jaccard_pairs",
                                 "dedup_ngram_jaccard_pairs"),
-        "tpch_scalar_panel": ("tpch_q6_forecast", "tpch_q17_small_quantity"),
         "dedup_exact_panel": ("dedup_exact_groups", "dedup_keep_first"),
         "window_session_panel": ("window_user_gaps", "window_sessionize"),
         # r6 panels

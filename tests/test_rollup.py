@@ -184,8 +184,8 @@ def test_compact_crash_recovery(spark, sf_med, tmp_path):
 def test_rollup_oracles_match_duckdb(spark, sf_med):
     """Executes every rollup_* oracle string against DuckDB at the
     driver's adjudication scale (these entries register after the
-    50-slot window, so pytest is their oracle gate — the tpch_*
-    pattern)."""
+    50-slot window, so pytest is their oracle gate, as the CI
+    registry gate in tests/test_oracle_registry.py is for all)."""
     import duckdb
 
     from clickhouse_observability_spark.registry import oracle_sql, queries
