@@ -402,7 +402,7 @@ def _run_bench() -> None:
         shutil.rmtree(tmp6, ignore_errors=True)
 
     # Streaming-path throughput: the full micro-batch pipeline
-    # (submit -> JSONL inbox -> file source -> foreachBatch -> sorted
+    # (submit -> parquet inbox -> file source -> foreachBatch -> sorted
     # partitioned parquet) at the reference's 500-entry batch size.
     # Reference steady-state floor: 5,000 rows/s (batcher.go:62-75).
     from clickhouse_observability_spark.streaming.batcher import IngestStream

@@ -18,7 +18,11 @@ an RFC3339/RFC3339Nano *string*, attrs as map<string,string>.
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Mapping
+
+import pyarrow as pa
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # --- at-rest `logs` table (db.go:41-49) --------------------------------
 LOGS_SCHEMA = T.StructType(
@@ -50,6 +54,27 @@ INGEST_SCHEMA = T.StructType(
         T.StructField("span_id", T.StringType(), nullable=True),
     ]
 )
+
+# The same wire form as Arrow: the inbox file format and what the
+# BatchWrite decoder builds.
+INGEST_ARROW_SCHEMA = to_arrow_schema(INGEST_SCHEMA)
+
+
+def ingest_table(rows: pa.Table | Iterable[Mapping]) -> pa.Table:
+    """Wire-form rows (dicts keyed by INGEST_SCHEMA's names) as an
+    INGEST_ARROW_SCHEMA table; a table already in that schema passes
+    through. A missing key is a null; a value the schema cannot hold
+    (a non-string msg, attrs that are not a string map) raises
+    ValueError instead of being coerced or dropped later."""
+    if isinstance(rows, pa.Table):
+        if not rows.schema.equals(INGEST_ARROW_SCHEMA):
+            raise ValueError(f"table does not have the ingest schema: {rows.schema}")
+        return rows
+    try:
+        return pa.Table.from_pylist(list(rows), schema=INGEST_ARROW_SCHEMA)
+    except (pa.ArrowInvalid, pa.ArrowTypeError) as exc:
+        raise ValueError(f"row does not fit the ingest schema: {exc}") from exc
+
 
 # --- driver testdata tables (TESTDATA.md / FIXTURES.md §2-3) -----------
 TESTDATA_TABLES = (

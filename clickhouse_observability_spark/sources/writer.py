@@ -28,6 +28,7 @@ import threading
 from collections.abc import Iterable, Mapping
 from contextlib import contextmanager
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,6 +42,7 @@ from clickhouse_observability_spark.schema import (
     LOGS_COLUMNS,
     LOGS_SCHEMA,
     PARTITION_COLUMN,
+    ingest_table,
 )
 
 
@@ -398,18 +400,19 @@ class LogsTable:
         return self.spark.createDataFrame(rows, schema)
 
     # -- S1: ingestion entry point (service.go:21-47) -------------------
-    def ingest_batch(self, rows: Iterable[Mapping]) -> int:
+    def ingest_batch(self, rows: pa.Table | Iterable[Mapping]) -> int:
         """BatchWrite: normalize + enqueue a batch, return the count
         of entries ACCEPTED (not persisted) — service.go:45-46 replies
         `written=len(out)` before the DB write happens. The write here
         is synchronous (Spark has no detached fire-and-forget write),
         which upgrades the reference's at-most-once to effectively
         at-least-once; SURVEY.md §2.9 ST3 documents the divergence.
+        `rows` is an INGEST_ARROW_SCHEMA table or wire-form dicts that
+        fit it (schema.ingest_table raises on one that does not).
         """
-        rows = list(rows)
-        if not rows:
+        table = ingest_table(rows)
+        if not table.num_rows:
             return 0
-        df = self.spark.createDataFrame(rows, INGEST_SCHEMA)
-        accepted = len(rows)
+        df = self.spark.createDataFrame(table, INGEST_SCHEMA)
         self.insert(normalize_ingest(df))
-        return accepted
+        return table.num_rows

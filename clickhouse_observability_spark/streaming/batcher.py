@@ -27,6 +27,14 @@ channel (ST2) sizes the producer-side buffer, not a flush, so it does
 not size a trigger either; here the buffer is the inbox on disk, not a
 user-space queue that blocks producers.
 
+The inbox holds one uncompressed parquet file (INGEST_ARROW_SCHEMA) per
+flush_size rows of a call. BatchWrite decodes its request straight into
+an Arrow table (api/grpc_transport.decode_batch_write_table) and
+submit_many writes that table, so neither the ack nor the trigger
+builds a Python object or a line of text per row. Dict rows from
+other callers become the same table, and a row the schema cannot hold
+raises at submit_many instead of being dropped by the trigger.
+
 One micro-batch is one INSERT block, as in the reference's MergeTree
 (db.go:39-57): foreachBatch normalizes it as a single partition and
 persists it, the insert writes ONE sorted part per month from it, and
@@ -56,10 +64,12 @@ import os
 import uuid
 from collections.abc import Iterable, Mapping
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from clickhouse_observability_spark.schema import INGEST_SCHEMA
+from clickhouse_observability_spark.schema import INGEST_SCHEMA, ingest_table
 from clickhouse_observability_spark.sources.writer import LogsTable, normalize_ingest
 
 DEFAULT_FLUSH_EVERY_MS = 100  # main.go:29 INGEST_MAX_DELAY_MS
@@ -83,9 +93,10 @@ def _env_int(name: str, default: int) -> int:
 class IngestStream:
     """File-fed streaming ingest into a LogsTable.
 
-    Producers drop wire-format JSONL files into `inbox_dir` (the
-    Spark-native stand-in for the gRPC enqueue boundary); the stream
-    micro-batches them into the partitioned logs table.
+    Producers drop wire-form parquet files into `inbox_dir` through
+    submit_many (the Spark-native stand-in for the gRPC enqueue
+    boundary); the stream micro-batches them into the partitioned
+    logs table.
     """
 
     MARKER_RETENTION = 1000  # committed-batch markers kept behind the head
@@ -155,36 +166,63 @@ class IngestStream:
         os.makedirs(self.committed_dir, exist_ok=True)
 
     # -- producer side (ST4) -------------------------------------------
-    def submit_many(self, rows: Iterable[Mapping]) -> int:
+    def submit_many(self, rows: pa.Table | Iterable[Mapping]) -> int:
         """Enqueue a batch; returns the ACCEPTED count immediately,
-        before any flush happens (service.go:45-46 contract). Large
+        before any flush happens (service.go:45-46 contract). `rows`
+        is an INGEST_ARROW_SCHEMA table (what BatchWrite decodes) or
+        wire-form dicts, which must fit that schema: a row it cannot
+        hold raises ValueError here and nothing is enqueued. Large
         submissions split into flush_size-row files so the per-trigger
         file cap bounds a micro-batch's rows."""
-        rows = list(rows)
-        if not rows:
-            return 0
-        for i in range(0, len(rows), self.flush_size):
-            chunk = rows[i:i + self.flush_size]
+        table = ingest_table(rows)
+        n = table.num_rows
+        for i in range(0, n, self.flush_size):
             name = uuid.uuid4().hex
-            tmp = os.path.join(self.inbox_dir, f".{name}.jsonl.tmp")
-            dst = os.path.join(self.inbox_dir, f"{name}.jsonl")
-            # one write per file: this runs on the ack path
-            text = "".join([json.dumps(dict(r)) + "\n" for r in chunk])
-            with open(tmp, "w") as f:
-                f.write(text)
+            tmp = os.path.join(self.inbox_dir, f".{name}.parquet.tmp")
+            dst = os.path.join(self.inbox_dir, f"{name}.parquet")
+            # uncompressed: the file is read once, by the next trigger
+            pq.write_table(table.slice(i, self.flush_size), tmp,
+                           compression="none")
             os.rename(tmp, dst)  # atomic publish: the source never reads partials
-        return len(rows)
+        return n
+
+    def _convert_jsonl_inbox(self) -> None:
+        """Rewrite, as parquet under the same name, every JSONL file an
+        older server left in the inbox (acked rows not yet written, or
+        a planned batch a restart replays). The name stays, so the
+        checkpoint's file log still matches it, and so does the
+        modification time, which the file source compares with its
+        maxFileAge horizon; the stream reads the content as parquet.
+        Same tmp-then-rename publish as submit_many; a file already
+        converted starts with PAR1."""
+        for name in sorted(os.listdir(self.inbox_dir)):
+            if name.startswith(".") or not name.endswith(".jsonl"):
+                continue
+            path = os.path.join(self.inbox_dir, name)
+            with open(path, "rb") as f:
+                if f.read(4) == b"PAR1":
+                    continue
+                f.seek(0)
+                lines = [ln for ln in f.read().splitlines() if ln.strip()]
+            try:
+                table = ingest_table(json.loads(ln) for ln in lines)
+            except ValueError as exc:  # JSONDecodeError is one
+                raise ValueError(
+                    f"inbox file {path} cannot be converted to parquet: {exc}"
+                ) from exc
+            tmp = os.path.join(self.inbox_dir, f".{name}.tmp")
+            pq.write_table(table, tmp, compression="none")
+            st = os.stat(path)
+            os.utime(tmp, ns=(st.st_atime_ns, st.st_mtime_ns))
+            os.rename(tmp, path)
 
     # -- stream lifecycle (ST1/ST5) ------------------------------------
     def start(self) -> StreamingQuery:
+        self._convert_jsonl_inbox()
         src = (
             self.spark.readStream.schema(INGEST_SCHEMA)
             .option("maxFilesPerTrigger", self.max_files_per_trigger)
-            # Unparseable lines are rejected, not ingested as all-NULL
-            # rows — the analog of the reference gRPC layer refusing a
-            # malformed BatchWriteRequest before it reaches the batcher.
-            .option("mode", "DROPMALFORMED")
-            .json(self.inbox_dir)
+            .parquet(self.inbox_dir)
         )
 
         self.query = (

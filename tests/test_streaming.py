@@ -54,7 +54,7 @@ def test_env_config_parity(spark, tmp_path, monkeypatch):
     assert s.flush_every_ms == 250 and s.flush_size == 3
     # batch-size chunking: 7 rows at size 3 -> 3 inbox files
     assert s.submit_many([_wire(i) for i in range(7)]) == 7
-    files = [f for f in os.listdir(s.inbox_dir) if f.endswith(".jsonl")]
+    files = [f for f in os.listdir(s.inbox_dir) if f.endswith(".parquet")]
     assert len(files) == 3
 
     s2 = IngestStream(
@@ -113,6 +113,45 @@ def test_flush_on_shutdown_then_resume(spark, tmp_path):
     q.processAllAvailable()
     s2.stop(drain=False)
     assert table.read().count() == 5  # exactly once across restart here
+
+
+def test_jsonl_inbox_files_are_converted_at_start(spark, tmp_path):
+    # An inbox from a server that wrote JSONL: its files are rewritten
+    # as parquet under the same name at start(), ingested once, and
+    # left alone by the next restart.
+    import json
+    import os
+
+    table = LogsTable(spark, str(tmp_path / "logs"))
+    table.init_schema()
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    legacy = inbox / "legacy.jsonl"
+    legacy.write_text("".join(json.dumps(_wire(i)) + "\n" for i in range(3)))
+    # the file source keys seen files by path and skips any older than
+    # its maxFileAge horizon, so the rewrite keeps both
+    mtime = time.time_ns() - 60 * 10**9
+    os.utime(legacy, ns=(mtime, mtime))
+    s = IngestStream(spark, table, str(inbox), str(tmp_path / "ckpt"))
+    s.submit_many([_wire(i + 10) for i in range(2)])
+    s.start()
+    s.stop()
+    assert {r.msg for r in table.read().collect()} == {"m0", "m1", "m2", "m10", "m11"}
+    assert legacy.read_bytes()[:4] == b"PAR1"
+    assert legacy.stat().st_mtime_ns == mtime
+    assert not [f for f in os.listdir(inbox) if f.startswith(".")]
+    s2 = IngestStream(spark, table, str(inbox), str(tmp_path / "ckpt"))
+    s2.start()
+    s2.stop()
+    assert table.read().count() == 5
+
+    # a file that is not wire-form JSONL stops start() with its name
+    bad = inbox / "bad.jsonl"
+    bad.write_text('{"msg": 5}\n')
+    s3 = IngestStream(spark, table, str(inbox), str(tmp_path / "ckpt"))
+    with pytest.raises(ValueError, match="bad.jsonl"):
+        s3.start()
+    assert s3.query is None
 
 
 def test_batch_retry_admits_no_duplicates(spark, tmp_path):
